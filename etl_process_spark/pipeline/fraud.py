@@ -2,7 +2,11 @@
 
 Re-expresses ``py_scripts/report.py:12-113`` as a composable DataFrame
 pipeline: a 5-way left-join denormalization (``cl``), a 9-lag per-card
-event-time window (``lg``), and four rule predicates UNION ALL-ed.
+event-time window (``lg``), and four rule predicates evaluated together on
+one scan of ``lg``: each row emits one event per rule it fires. That fold
+is bag-equivalent to the reference's four-branch UNION ALL
+(report.py:63-113), and runs the join chain once where a UNION ALL plans
+one copy of it per branch.
 
 Parity corners kept deliberately:
 * terminals join is point-in-time with STRICT inequalities (report.py:40-41);
@@ -11,7 +15,7 @@ Parity corners kept deliberately:
   versions and all;
 * ``concat_ws`` for fio (Postgres concat treats NULL as '', report.py:23);
 * blacklist default entry date 9999-12-31 via coalesce (report.py:29);
-* UNION ALL bag semantics — one transaction can emit up to 4 rows;
+* the UNION ALL's bag semantics — one transaction can emit up to 4 rows;
 * ``report_dt`` (the reference's ``now()``, report.py:76) is injectable.
 
 Scale: dims broadcast (small by construction); the only shuffle in the whole
@@ -73,11 +77,13 @@ def enrich_transactions(
 
 
 def with_lags(cl: DataFrame) -> DataFrame:
-    """The ``lg`` CTE (report.py:50-62): 9 lag columns over one window spec."""
+    """The ``lg`` CTE (report.py:50-62): 9 lag columns over one window spec,
+    plus the ``cl`` columns rules 1–2 read, so all four rules run on it."""
     w = Window.partitionBy("card_num").orderBy("trans_date")
     return cl.select(
         "card_num", "trans_date", "terminal_city", "fio", "passport_num",
         "phone", "trans_id", "oper_type", "oper_result", "amt",
+        "passport_valid_to", "pass_bl", "entry_dt", "valid_to",
         F.lag("terminal_city").over(w).alias("lag_city"),
         seconds_between(F.col("trans_date"), F.lag("trans_date").over(w)).alias("lag_pr_sec"),
         F.lag("oper_result", 1).over(w).alias("res_1"),
@@ -90,15 +96,13 @@ def with_lags(cl: DataFrame) -> DataFrame:
     )
 
 
-def _event(
-    df: DataFrame, event_type: int, report_dt, include_trans_id: bool = False
-) -> DataFrame:
+def _event(df: DataFrame, report_dt, include_trans_id: bool = False) -> DataFrame:
     cols = [
         F.col("trans_date").alias("event_dt"),
         F.col("passport_num").alias("passport"),
         F.col("fio"),
         F.col("phone"),
-        F.lit(event_type).alias("event_type"),
+        F.col("event_type"),
         F.to_timestamp(F.lit(str(report_dt))).alias("report_dt"),
     ]
     if include_trans_id:
@@ -144,28 +148,32 @@ def _rule4() -> F.Column:
     )
 
 
-def _all_rules(
-    cl: DataFrame, lg: DataFrame, report_dt, include_trans_id: bool = False
-) -> DataFrame:
-    return (
-        _event(cl.filter(_rule1()), 1, report_dt, include_trans_id)
-        .unionByName(_event(cl.filter(_rule2()), 2, report_dt, include_trans_id))
-        .unionByName(_event(lg.filter(_rule3()), 3, report_dt, include_trans_id))
-        .unionByName(_event(lg.filter(_rule4()), 4, report_dt, include_trans_id))
+def _all_rules(lg: DataFrame, report_dt, include_trans_id: bool = False) -> DataFrame:
+    """One event row per (transaction, fired rule), from one pass over
+    ``lg``: the ids of the rules a row fires are collected into an array
+    (NULL and false predicates drop out) and exploded, so a transaction
+    that fires k rules yields k rows — the UNION ALL's bag, one scan."""
+    rules = (_rule1, _rule2, _rule3, _rule4)
+    fired = F.array_compact(
+        F.array(*[F.when(rule(), F.lit(i)) for i, rule in enumerate(rules, 1)])
+    )
+    return _event(
+        lg.withColumn("event_type", F.explode(fired)), report_dt, include_trans_id
     )
 
 
 def build_fraud_report(
     cl: DataFrame, report_dt, include_trans_id: bool = False
 ) -> DataFrame:
-    """Rules 1–4 UNION ALL (report.py:63-113). ``report_dt`` = pinned now().
+    """Rules 1–4 (report.py:63-113), one row per fired rule.
+    ``report_dt`` = pinned now().
 
     ``include_trans_id=True`` appends the source transaction id — the
     reference's rep_fraud schema (main.ddl:124-131) lacks it, but the
     runner's idempotent append needs a NULL-free dedup key; the default
     keeps the reference-parity shape.
     """
-    return _all_rules(cl, with_lags(cl), report_dt, include_trans_id)
+    return _all_rules(with_lags(cl), report_dt, include_trans_id)
 
 
 def build_fraud_report_incremental(
@@ -202,5 +210,7 @@ def build_fraud_report_incremental(
         .filter(F.col("__rn") <= 3)
         .drop("__rn")
     )
+    # the lagged rows after the watermark are exactly ``new``, so all four
+    # rules read them from ``lg``
     lg = with_lags(tails.unionByName(new)).filter(F.col("trans_date") > wm)
-    return _all_rules(new, lg, report_dt, include_trans_id)
+    return _all_rules(lg, report_dt, include_trans_id)

@@ -97,9 +97,10 @@ def quarantine_transactions(stg: DataFrame) -> tuple[DataFrame, DataFrame]:
     array, so they can be repaired and replayed through the same loader
     (idempotent thanks to the dedup-on-insert anti join). The split is a
     pure map-side expression — the reason array is computed inside
-    whole-stage codegen, zero shuffles, and the input is scanned once per
-    branch off the same staging frame (cache ``stg`` when the source is
-    remote).
+    whole-stage codegen, zero shuffles. Each branch that is written scans
+    the input once; the nightly runner writes the clean branch, and the
+    rejects only when the counts observed on that write show there are
+    any, so a file without rejects is read once.
     """
     casts = {
         "transaction_date": F.col("transaction_date").cast("timestamp"),

@@ -6,7 +6,13 @@ Spark terms. ``observe`` attaches aggregate metrics to a plan that are
 computed DURING whatever action runs anyway: a load's write action also
 yields its row count, null counts, and min/max watermarks, with zero
 additional scans. At 100 TB the difference between "metrics ride along"
-and "metrics re-scan" is the whole nightly budget.
+and "metrics re-scan" is the whole nightly budget. The nightly runner
+(``runner.run_daily_batch``) counts every load and the report this way.
+
+One caveat: when a join input's query stage comes out empty, AQE replaces
+the join with an empty relation, and metrics observed inside that input
+go with it (``Observation.get`` then raises). Metrics observed above the
+join always arrive.
 """
 
 from __future__ import annotations

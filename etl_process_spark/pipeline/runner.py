@@ -13,6 +13,10 @@ Idempotency comes from the same three mechanisms the reference uses:
 filename-date watermarks (files at or below are never re-read), anti-join
 dedup-on-insert for facts, and the SCD2 merge's no-op on unchanged state —
 so re-running the batch with no new inputs appends nothing.
+
+Row counts and watermark bounds ride on the writes (``quality.observed``):
+Spark plans every action on its own, so a ``count()`` beside a write runs
+the write's plan a second time.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import datetime as dt
 from dataclasses import dataclass, field
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,10 +37,10 @@ from etl_process_spark.pipeline.fraud import (
 )
 from etl_process_spark.pipeline.loaders import (
     load_blacklist_file,
-    load_transactions_file,
     quarantine_transactions,
     stage_transactions,
 )
+from etl_process_spark.pipeline.quality import observed
 from etl_process_spark.sources.inbox import DatedInbox
 from etl_process_spark.sources.tables import TableCatalog
 from etl_process_spark.sources.watermark import WatermarkStore
@@ -84,31 +89,37 @@ def run_daily_batch(
     res = BatchResult()
 
     # --- transactions: dated inbox -> quarantine split -> dedup append ----
+    # The counts ride on the fact write; the rejects, a second scan of the
+    # file, are written only when there are any.
     tx_inbox = DatedInbox(inbox_dir, "transactions_*.txt")
     last = wm.get("transactions", "1900-01-01")
     min_new_ts: dt.datetime | None = None  # earliest newly-appended trans_date
     for fdate, path in tx_inbox.discover(after=dt.date.fromisoformat(last[:10])):
         fact = cat.read("fact_transactions") if cat.exists("fact_transactions") else None
-        clean, rejects = quarantine_transactions(stage_transactions(spark, path))
-        new_rows = clean if fact is None else clean.join(
-            fact.select("trans_id"), on="trans_id", how="left_anti"
+        stg, stg_obs = observed(stage_transactions(spark, path))
+        clean, rejects = quarantine_transactions(stg)
+        clean, clean_obs = observed(clean)
+        new_rows, new_obs = observed(
+            clean if fact is None else clean.join(
+                fact.select("trans_id"), on="trans_id", how="left_anti"
+            ),
+            watermark_col="trans_date",
         )
-        n_new = new_rows.count()
-        if n_new:
-            batch_min = new_rows.agg(F.min("trans_date")).first()[0]
-            if batch_min is not None and (min_new_ts is None or batch_min < min_new_ts):
-                min_new_ts = batch_min
-        n_rej = rejects.count()
-        if fact is None:
-            cat.overwrite("fact_transactions", new_rows)
-        elif n_new:
-            cat.append("fact_transactions", new_rows)
+        cat.append("fact_transactions", new_rows)
+        n_new = new_obs.get["n_rows"]
+        batch_min = new_obs.get["wm_min"]
+        if batch_min is not None and (min_new_ts is None or batch_min < min_new_ts):
+            min_new_ts = batch_min
+        try:
+            n_rej = stg_obs.get["n_rows"] - clean_obs.get["n_rows"]
+        except Py4JJavaError:
+            # An empty clean side lets AQE replace the anti-join with an
+            # empty relation, which drops the metrics its input stage
+            # carried. Nothing was clean, so every staged row is a reject.
+            n_rej = rejects.count()
         if n_rej:
             stamped = rejects.withColumn("load_date", F.lit(str(fdate)))
-            if cat.exists("quarantine_transactions"):
-                cat.append("quarantine_transactions", stamped)
-            else:
-                cat.overwrite("quarantine_transactions", stamped)
+            cat.append("quarantine_transactions", stamped)
         res.transactions_files += 1
         res.transactions_appended += n_new
         res.transactions_quarantined += n_rej
@@ -121,13 +132,10 @@ def run_daily_batch(
     last = wm.get("blacklist", "1899-01-01")
     for fdate, path in bl_inbox.discover(after=dt.date.fromisoformat(last[:10])):
         bl = cat.read("fact_blacklist") if cat.exists("fact_blacklist") else None
-        new_rows = load_blacklist_file(spark, path, bl)
-        if bl is None:
-            cat.overwrite("fact_blacklist", new_rows)
-        else:
-            cat.append("fact_blacklist", new_rows)
+        new_rows, new_obs = observed(load_blacklist_file(spark, path, bl))
+        cat.append("fact_blacklist", new_rows)
         res.blacklist_files += 1
-        res.blacklist_appended += new_rows.count()
+        res.blacklist_appended += new_obs.get["n_rows"]
         wm.set("blacklist", str(fdate))
         if archive:
             bl_inbox.archive(path)
@@ -197,48 +205,53 @@ def run_daily_batch(
     # collision-free for same-second events. A retroactive dimension
     # rewrite that changes OLD transactions' enrichment needs an explicit
     # rebuild (clear the 'report' watermark + rep_fraud) — same as any
-    # watermark-incremental pipeline.
-    if cat.exists("fact_transactions") and cat.exists("dim_terminals_hist"):
-        blacklist = (
-            cat.read("fact_blacklist")
-            if cat.exists("fact_blacklist")
-            else dims["blacklist"]
+    # watermark-incremental pipeline. A night that appended no facts and
+    # finds none past the watermark has no events to derive, and skips the
+    # build and its write (an empty append still adds a file); facts that
+    # an interrupted run appended but never reported are past the
+    # watermark, so the next run reports them.
+    if not (cat.exists("fact_transactions") and cat.exists("dim_terminals_hist")):
+        return res
+    fact = cat.read("fact_transactions")
+    fact_max = fact.agg(F.max("trans_date")).first()[0]
+    fact_wm = "" if fact_max is None else str(fact_max)
+    stored_wm = wm.get("report", "")
+    if not res.transactions_appended and fact_wm <= stored_wm:
+        return res
+    blacklist = (
+        cat.read("fact_blacklist")
+        if cat.exists("fact_blacklist")
+        else dims["blacklist"]
+    )
+    cl = enrich_transactions(
+        fact,
+        cat.read("dim_terminals_hist"),
+        dims["cards"], dims["accounts"], dims["clients"],
+        blacklist,
+    )
+    if not stored_wm:
+        report = build_fraud_report(cl, clock, include_trans_id=True)
+        eff_wm = None
+    else:
+        eff_wm = stored_wm
+        if min_new_ts is not None and str(min_new_ts) <= stored_wm:
+            eff_wm = str(min_new_ts - dt.timedelta(seconds=1))
+        report = build_fraud_report_incremental(
+            cl, eff_wm, clock, include_trans_id=True
         )
-        fact = cat.read("fact_transactions")
-        cl = enrich_transactions(
-            fact,
-            cat.read("dim_terminals_hist"),
-            dims["cards"], dims["accounts"], dims["clients"],
-            blacklist,
+    if cat.exists("rep_fraud"):
+        prior = cat.read("rep_fraud")
+        if eff_wm is not None:
+            prior = prior.filter(
+                F.col("event_dt") > F.to_timestamp(F.lit(eff_wm))
+            )
+        report = report.join(
+            prior.select("trans_id", "event_type"),
+            on=["trans_id", "event_type"], how="left_anti",
         )
-        stored_wm = wm.get("report", "")
-        if not stored_wm:
-            report = build_fraud_report(cl, clock, include_trans_id=True)
-            eff_wm = None
-        else:
-            eff_wm = stored_wm
-            if min_new_ts is not None and str(min_new_ts) <= stored_wm:
-                eff_wm = str(min_new_ts - dt.timedelta(seconds=1))
-            report = build_fraud_report_incremental(
-                cl, eff_wm, clock, include_trans_id=True
-            )
-        if cat.exists("rep_fraud"):
-            prior = cat.read("rep_fraud")
-            if eff_wm is not None:
-                prior = prior.filter(
-                    F.col("event_dt") > F.to_timestamp(F.lit(eff_wm))
-                )
-            report = report.join(
-                prior.select("trans_id", "event_type"),
-                on=["trans_id", "event_type"], how="left_anti",
-            )
-            n = report.count()
-            if n:
-                cat.append("rep_fraud", report)
-        else:
-            n = report.count()
-            cat.overwrite("rep_fraud", report)
-        res.report_rows = n
-        wm.advance_from("report", fact, "trans_date")
-
+    report, report_obs = observed(report)
+    cat.append("rep_fraud", report)
+    res.report_rows = report_obs.get["n_rows"]
+    if fact_wm > stored_wm:
+        wm.set("report", fact_wm)
     return res

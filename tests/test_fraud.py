@@ -5,6 +5,7 @@ Each rule fires on exactly one planted transaction; near-miss rows
 at exactly >1h, only 2 REJECTs, non-decreasing amounts."""
 
 import datetime as dt
+from collections import Counter
 from decimal import Decimal
 
 import pytest
@@ -124,6 +125,14 @@ def test_asof_boundary_strict(report):
     assert report.filter(F.col("event_dt") == EF).count() == 0
 
 
+CL_SCHEMA = (
+    "trans_id string, trans_date timestamp, card_num string, oper_type string, "
+    "amt decimal(15,2), oper_result string, terminal string, valid_to date, "
+    "fio string, passport_num string, passport_valid_to date, phone string, "
+    "pass_bl string, entry_dt date, terminal_city string"
+)
+
+
 @pytest.fixture(scope="module")
 def synthetic_cl(spark):
     """A few hundred pre-enriched rows (the cl CTE's schema) with every
@@ -154,13 +163,7 @@ def synthetic_cl(spark):
                 dt.date(2021, 1, 1) if blacklisted else INF_D,
                 rng.choice(["Moscow", "Kazan", "Tver"]),
             ))
-    return spark.createDataFrame(
-        rows,
-        "trans_id string, trans_date timestamp, card_num string, oper_type string, "
-        "amt decimal(15,2), oper_result string, terminal string, valid_to date, "
-        "fio string, passport_num string, passport_valid_to date, phone string, "
-        "pass_bl string, entry_dt date, terminal_city string",
-    ).cache()
+    return spark.createDataFrame(rows, CL_SCHEMA).cache()
 
 
 def _events(df):
@@ -197,3 +200,83 @@ def test_incremental_report_composes_across_two_advances(synthetic_cl):
     )
     assert sorted(_events(step1) + _events(step2)) == _events(full)
     assert len(_events(step1)) > 0 and len(_events(step2)) > 0
+
+
+def test_transaction_firing_two_rules_yields_two_rows(spark):
+    """Bag semantics: an expired passport plus a city hop within the hour
+    is two events for the one transaction, as in the UNION ALL."""
+    def row(tid, t, city):
+        return (tid, t, "CARD1", "PAYMENT", Decimal("10.00"), "SUCCESS", "T1",
+                INF_D, "Person 1", "P1", dt.date(2020, 1, 1), "+70000000001",
+                None, INF_D, city)
+
+    cl = spark.createDataFrame(
+        [row("a", D(2021, 1, 1, 10, 0), "Moscow"),
+         row("b", D(2021, 1, 1, 10, 30), "Kazan")],
+        CL_SCHEMA,
+    )
+    rows = build_fraud_report(cl, REPORT_DT, include_trans_id=True).collect()
+    # "a" has the expired passport too, but no earlier row to hop from
+    assert sorted((r["trans_id"], r["event_type"]) for r in rows) == [
+        ("a", 1), ("b", 1), ("b", 3)
+    ]
+
+
+def _union_all_report(cl, lg, report_dt):
+    """The four-branch UNION ALL the rule fold replaced (report.py:63-113):
+    rules 1-2 on the enriched rows, rules 3-4 on the lagged ones."""
+    from etl_process_spark.pipeline.fraud import _rule1, _rule2, _rule3, _rule4
+
+    def event(df, event_type):
+        return df.select(
+            F.col("trans_date").alias("event_dt"),
+            F.col("passport_num").alias("passport"),
+            "fio", "phone",
+            F.lit(event_type).alias("event_type"),
+            F.to_timestamp(F.lit(str(report_dt))).alias("report_dt"),
+            "trans_id",
+        )
+
+    return (
+        event(cl.filter(_rule1()), 1)
+        .unionByName(event(cl.filter(_rule2()), 2))
+        .unionByName(event(lg.filter(_rule3()), 3))
+        .unionByName(event(lg.filter(_rule4()), 4))
+    )
+
+
+def _bag(df):
+    cols = ["event_dt", "passport", "fio", "phone", "event_type", "report_dt", "trans_id"]
+    return Counter(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_rule_fold_matches_union_all_oracle(spark, synthetic_cl):
+    """Full and incremental reports equal the UNION ALL, row for row and
+    with multiplicity."""
+    from etl_process_spark.pipeline.fraud import (
+        build_fraud_report_incremental,
+        with_lags,
+    )
+
+    # the random fixture never lines up rule 4; plant one run after the
+    # watermark below: 3 decreasing REJECTs, then a SUCCESS, in 15 minutes
+    rule4 = spark.createDataFrame(
+        [(f"r4_{i}", D(2021, 3, 1, 20, 5 * i), "CARD_R4", "WITHDRAW",
+          Decimal(400 - 100 * i), "SUCCESS" if i == 3 else "REJECT", "T1",
+          INF_D, "Person R4", "PR4", INF_D, "+70000000000", None, INF_D, "Tver")
+         for i in range(4)],
+        CL_SCHEMA,
+    )
+    cl = synthetic_cl.unionByName(rule4)
+    lg = with_lags(cl)
+    full = _bag(build_fraud_report(cl, REPORT_DT, include_trans_id=True))
+    assert full == _bag(_union_all_report(cl, lg, REPORT_DT))
+    assert {k[4] for k in full} == {1, 2, 3, 4}
+
+    wm = D(2021, 3, 1, 18, 0, 0)
+    after = F.col("trans_date") > F.lit(wm)
+    inc = _bag(build_fraud_report_incremental(
+        cl, wm, REPORT_DT, include_trans_id=True
+    ))
+    assert inc == _bag(_union_all_report(cl.filter(after), lg.filter(after), REPORT_DT))
+    assert {k[4] for k in inc} == {1, 2, 3, 4}

@@ -5,6 +5,7 @@ SCD2 no-op — the reference's idempotency mechanisms, composed)."""
 from __future__ import annotations
 
 import datetime as dt
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +76,11 @@ def _write_day2(inbox):
     )
 
 
+def _table_files(wh, table):
+    """Every file under the table's version directories."""
+    return sorted(p for p in Path(wh).glob(f"{table}_v*/**/*") if p.is_file())
+
+
 def test_two_day_run_then_idempotent_rerun(spark, dims, tmp_path):
     inbox = tmp_path / "inbox"
     inbox.mkdir()
@@ -119,6 +125,7 @@ def test_two_day_run_then_idempotent_rerun(spark, dims, tmp_path):
 
     # --- re-run with no new inputs: everything is a no-op -----------------
     before = sorted(map(tuple, rep.collect()))
+    rep_files = _table_files(wh, "rep_fraud")
     r3 = run_daily_batch(
         spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
         clock=CLOCK + dt.timedelta(days=1), archive=False,
@@ -128,6 +135,8 @@ def test_two_day_run_then_idempotent_rerun(spark, dims, tmp_path):
     assert r3.terminal_snapshots == 0
     assert r3.report_rows == 0
     assert sorted(map(tuple, cat.read("rep_fraud").collect())) == before
+    # nothing new to report: no build, and no empty append adding a file
+    assert _table_files(wh, "rep_fraud") == rep_files
     assert cat.read("fact_transactions").count() == 4
 
     # the DQ gate ran each time over the clean fact: zero violations,
@@ -243,3 +252,89 @@ def test_late_arriving_fact_still_reported(spark, dims, tmp_path):
         clock=CLOCK + dt.timedelta(days=2), archive=False,
     )
     assert r3.report_rows == 0
+
+
+def test_day_two_runs_no_count_actions(spark, dims, tmp_path):
+    """Counts ride on the writes (observe), so a night runs only the jobs
+    its writes, the report's watermark max and the DQ read-back need. A
+    returning count() or first() over a load or the report adds jobs and
+    fails this. Measured: 37 jobs for day 2."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "wh")
+    _write_day1(inbox)
+    run_daily_batch(
+        spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+        clock=dt.datetime(2024, 3, 2, 1, 17), archive=False,
+    )
+    _write_day2(inbox)
+    sc = spark.sparkContext
+    sc.setJobGroup("runner_day2", "day 2 of the nightly batch")
+    try:
+        r2 = run_daily_batch(
+            spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+            clock=CLOCK, archive=False,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r2.transactions_appended == 2
+    assert len(sc.statusTracker().getJobIdsForGroup("runner_day2")) <= 37
+
+
+def test_overlapping_blacklist_files_count_new_rows(spark, dims, tmp_path):
+    """Two blacklist files in one run share a passport: only the truly new
+    rows are appended, and the reported count is what was appended."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "wh")
+    (inbox / "passport_blacklist_01032024.xlsx.csv").write_text(
+        "date;passport\n2024-02-01;P111\n2024-02-02;P999\n"
+    )
+    (inbox / "passport_blacklist_02032024.xlsx.csv").write_text(
+        "date;passport\n2024-02-02;P999\n2024-02-03;P222\n"
+    )
+    r = run_daily_batch(
+        spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+        clock=CLOCK, archive=False,
+    )
+    bl = TableCatalog(spark, wh).read("fact_blacklist")
+    assert r.blacklist_files == 2
+    assert r.blacklist_appended == 3
+    assert bl.count() == 3
+    assert sorted(x["passport_num"] for x in bl.collect()) == ["P111", "P222", "P999"]
+
+
+def test_all_rejected_file_counts_rejects_under_sort_merge_dedup(spark, dims, tmp_path):
+    """A file whose rows are all malformed leaves the dedup anti-join an
+    empty clean side; under a sort-merge anti-join AQE then swaps the join
+    for an empty relation and the counts observed below it never arrive.
+    The rejects must still be counted and quarantined."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "wh")
+    _write_day1(inbox)
+    run_daily_batch(
+        spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+        clock=dt.datetime(2024, 3, 2, 1, 17), archive=False,
+    )
+    (inbox / "transactions_02032024.txt").write_text(
+        TX_HEADER
+        + "T010;BROKEN;10,00;CARD1               ;PAYMENT;SUCCESS;A1\n"
+        + "T011;2024-03-02 09:00:00;1,2,3;CARD1               ;PAYMENT;SUCCESS;A1\n"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        r2 = run_daily_batch(
+            spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+            clock=CLOCK, archive=False,
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert r2.transactions_appended == 0
+    assert r2.transactions_quarantined == 2
+    cat = TableCatalog(spark, wh)
+    assert cat.read("quarantine_transactions").count() == 3   # 1 from day 1
+    assert cat.read("fact_transactions").count() == 2

@@ -17,6 +17,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,8 +26,13 @@ from etl_process_spark.functions.scalar import WATERMARK_EPOCH
 
 
 class WatermarkStore:
+    """One JSON file of watermarks. ``set`` is safe across threads sharing
+    the instance (the nightly loads run side by side); ``get`` needs no
+    lock because ``set`` swaps the file in atomically."""
+
     def __init__(self, path: str):
         self.path = path
+        self._lock = threading.Lock()
 
     def _load(self) -> dict[str, str]:
         if not os.path.exists(self.path):
@@ -39,12 +45,14 @@ class WatermarkStore:
         return self._load().get(table, default)
 
     def set(self, table: str, value: str | dt.datetime | dt.date) -> None:
-        data = self._load()
-        data[table] = str(value)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(data, fh, indent=1)
-        os.replace(tmp, self.path)
+        # read-modify-write of the whole file through one tmp path
+        with self._lock:
+            data = self._load()
+            data[table] = str(value)
+            tmp = self.path + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump(data, fh, indent=1)
+            os.replace(tmp, self.path)
 
     def advance_from(self, table: str, df: DataFrame, ts_col) -> str | None:
         """Upsert watermark = max(ts_col) over the staged batch (A1/A2).

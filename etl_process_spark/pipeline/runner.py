@@ -4,9 +4,10 @@ report, run nightly by cron).
 
 Where the reference runs 8 scripts as subprocesses, each opening its own DB
 connections, this is ONE driver function over ONE SparkSession: every stage
-is a function call sharing DataFrames and a ``TableCatalog`` warehouse, with
-a per-stage atomic pointer-swap write as the commit boundary (the analog of
-each script's ``conn.commit()``). Three orderings are load-bearing:
+is a function call sharing DataFrames and a ``TableCatalog`` warehouse.
+Every catalog write, append or overwrite, lands in a new directory and
+commits with one atomic pointer swap (the analog of each script's
+``conn.commit()``). Three orderings are load-bearing:
 
 - the loads come before the report, which joins the facts and dimensions
   they commit;
@@ -254,10 +255,7 @@ def run_daily_batch(
                 ex.unique("trans_id"),
             ],
         ).withColumn("run_clock", F.lit(str(clock)))
-        if cat.exists("dq_report"):
-            cat.append("dq_report", dq)
-        else:
-            cat.overwrite("dq_report", dq)
+        cat.append("dq_report", dq)
         return {
             r["rule"]: r["n_violations"] for r in cat.read("dq_report")
             .filter(F.col("run_clock") == str(clock)).collect()
@@ -318,10 +316,11 @@ def run_daily_batch(
                 prior = prior.filter(
                     F.col("event_dt") > F.to_timestamp(F.lit(eff_wm))
                 )
+            # the join puts its keys first; every night stores one order
             report = report.join(
                 prior.select("trans_id", "event_type"),
                 on=["trans_id", "event_type"], how="left_anti",
-            )
+            ).select(*report.columns)
         report, report_obs = observed(report)
         cat.append("rep_fraud", report)
         n_rows = report_obs.get["n_rows"]

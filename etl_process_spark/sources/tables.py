@@ -1,23 +1,59 @@
 """Warehouse table catalog — parquet-backed named tables.
 
 The reference's warehouse is 16 Postgres tables (main.ddl:1-137). Here each
-table is a parquet directory under a root, read/written through one catalog
-object so every stage shares the same paths and write discipline.
+table is a list of parquet directories under a root, read/written through
+one catalog object so every stage shares the same paths and write
+discipline.
 
-Write discipline (SURVEY §7 "hard parts" (a)): Spark cannot atomically
-overwrite a directory it is concurrently reading (it would truncate its own
-input). ``overwrite`` therefore writes to a fresh versioned directory and
-flips a pointer file — write-temp-then-swap — which also gives readers
-snapshot isolation between runs, the parity analog of the reference's
-per-script transactional commit (transaction.py:113).
+One commit protocol (SURVEY §7 "hard parts" (a)): Spark cannot atomically
+overwrite a directory it is concurrently reading, so no write touches a
+live directory. Every write goes through ``_commit``: it lands in a new
+directory ``{name}_{tag}``, then one atomic swap of ``{name}.version.json``
+(``{"dirs": [...], "committed": [[lo, hi], ...]}``) makes it visible. A
+replacing write (tag ``v<n>``) makes its directory the only live one and
+keeps it as a snapshot for ``read_version``; an appending write (tag
+``seg<id>``) adds its directory. Readers get snapshot isolation between
+runs, the parity analog of the reference's per-script transactional commit
+(transaction.py:113). ``committed`` holds the appended segment ids as
+merged ranges (constant size for contiguous ids, exact for gapped ones)
+and survives replacing writes, so ``has_segment`` still acknowledges
+segments a compaction folded away. Every append adds a live directory
+until a caller runs ``compact``; past Spark's partition-discovery
+threshold (32 root paths) every read runs an extra listing job.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _with_id(ranges: list[list[int]], sid: int) -> list[list[int]]:
+    """Sorted, merged ``[lo, hi]`` ranges with ``sid`` added."""
+    out: list[list[int]] = []
+    for lo, hi in sorted([*ranges, [sid, sid]]):
+        if out and lo <= out[-1][1] + 1:
+            out[-1][1] = max(out[-1][1], hi)
+        else:
+            out.append([lo, hi])
+    return out
+
+
+def _acked(ranges: list[list[int]], sid: int) -> bool:
+    return any(lo <= sid <= hi for lo, hi in ranges)
+
+
+def _parquet_files(d: str) -> list[str]:
+    return [
+        os.path.join(dirpath, f)
+        for dirpath, _, files in os.walk(d)
+        for f in files
+        if f.endswith(".parquet")
+    ]
 
 
 class TableCatalog:
@@ -34,30 +70,44 @@ class TableCatalog:
         if not os.path.exists(ptr):
             return None
         with open(ptr) as fh:
-            return json.load(fh)
-
-    def _write_pointer(self, name: str, payload: dict) -> None:
-        tmp = self._pointer(name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, self._pointer(name))
+            p = json.load(fh)
+        if "committed" in p:
+            return p
+        # an older pointer, {"dir"} or {"dirs", "segments", "compacted_through"}:
+        # read as the ids it acknowledged; the next commit rewrites it
+        thru = p.get("compacted_through", -1)
+        committed = [[0, thru]] if thru >= 0 else []
+        for sid in p.get("segments", {}):
+            committed = _with_id(committed, int(sid))
+        dirs = p["dirs"] if "dirs" in p else [p["dir"]]
+        return {"dirs": dirs, "committed": committed}
 
     def _current_dirs(self, name: str) -> list[str] | None:
         p = self._read_pointer(name)
-        if p is None:
-            return None
-        return p["dirs"] if "dirs" in p else [p["dir"]]
+        return None if p is None else p["dirs"]
 
-    def _current_dir(self, name: str) -> str | None:
-        ds = self._current_dirs(name)
-        if ds is None:
-            return None
-        if len(ds) != 1:
-            raise ValueError(
-                f"table {name} is a segment log ({len(ds)} segments); "
-                "compact it before using single-directory operations"
-            )
-        return ds[0]
+    def _commit(
+        self, name: str, df: DataFrame, tag: str, *, replace: bool,
+        segment_id: int | None = None, partition_cols: list[str] | None = None,
+    ) -> None:
+        """The one write path: write ``df`` to the new directory
+        ``{name}_{tag}``, then swap the pointer so that directory replaces
+        the live ones (``replace``) or joins them, with ``segment_id``
+        added to the committed ids."""
+        old = self._read_pointer(name) or {"dirs": [], "committed": []}
+        new_dir = os.path.join(self.root, f"{name}_{tag}")
+        writer = df.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(new_dir)
+        committed = old["committed"]
+        if segment_id is not None:
+            committed = _with_id(committed, segment_id)
+        dirs = [new_dir] if replace else [*old["dirs"], new_dir]
+        tmp = self._pointer(name) + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump({"dirs": dirs, "committed": committed}, fh)
+        os.replace(tmp, self._pointer(name))
 
     def exists(self, name: str) -> bool:
         return self._current_dirs(name) is not None
@@ -73,74 +123,45 @@ class TableCatalog:
         return (vs[-1] + 1) if vs else 0
 
     def overwrite(self, name: str, df: DataFrame) -> None:
-        """Atomic table rewrite: write new version dir, then flip pointer.
-
-        If the table was a segment log, the rewrite consolidates it back
-        to one directory; committed segment ids stay acknowledged via
-        ``compacted_through`` so ``has_segment`` (the streaming replay
-        guard) still reports them as applied.
-        """
-        old = self._read_pointer(name) or {}
-        new_dir = os.path.join(self.root, f"{name}_v{self._next_version(name)}")
-        df.write.mode("overwrite").parquet(new_dir)
-        payload: dict = {"dir": new_dir}
-        seg_ids = [int(s) for s in old.get("segments", {})]
-        thru = max([old.get("compacted_through", -1), *seg_ids] or [-1])
-        if thru >= 0:
-            payload["compacted_through"] = thru
-        self._write_pointer(name, payload)
+        """Atomic table rewrite: one new version directory replaces every
+        live one. Committed segment ids stay acknowledged."""
+        self._commit(name, df, f"v{self._next_version(name)}", replace=True)
 
     def append_segment(self, name: str, df: DataFrame, segment_id: int) -> None:
         """Append-only log write: persist ``df`` as segment ``segment_id``
         and commit it with one atomic pointer swap — O(segment) bytes
         written per call instead of ``overwrite``'s O(table) rewrite.
 
-        Idempotent per segment id: a replayed (crashed-and-rerun) epoch
-        rewrites the same segment directory with the same deterministic
-        content and re-commits the same pointer, so a crash at any step
-        leaves either the old pointer (orphan dir, rewritten on replay)
-        or the new one (segment fully visible). Readers see the union of
-        all committed segments through ``read``. Periodic ``compact``
-        (or ``overwrite``) folds the log back to one directory.
+        Idempotent per segment id: a committed id is a no-op, and a crash
+        before the swap leaves an orphan directory that the replay
+        rewrites. Readers see the union of all live directories through
+        ``read``. Periodic ``compact`` (or ``overwrite``) folds the log
+        back to one directory.
         """
-        old = self._read_pointer(name)
-        seg_dir = os.path.join(self.root, f"{name}_seg{int(segment_id):08d}")
-        df.write.mode("overwrite").parquet(seg_dir)
-        if old is None:
-            payload: dict = {"dirs": [seg_dir], "segments": {str(int(segment_id)): seg_dir}}
-        else:
-            dirs = old["dirs"] if "dirs" in old else [old["dir"]]
-            segments = dict(old.get("segments", {}))
-            segments[str(int(segment_id))] = seg_dir
-            if seg_dir not in dirs:
-                dirs = dirs + [seg_dir]
-            payload = {"dirs": dirs, "segments": segments}
-            if "compacted_through" in old:
-                payload["compacted_through"] = old["compacted_through"]
-        self._write_pointer(name, payload)
+        sid = int(segment_id)
+        if self.has_segment(name, sid):
+            return
+        self._commit(name, df, f"seg{sid:08d}", replace=False, segment_id=sid)
 
     def has_segment(self, name: str, segment_id: int) -> bool:
-        """True iff ``segment_id`` was committed (directly, or subsumed by
-        a later compaction) — the streaming sink's epoch-replay guard."""
+        """True iff ``segment_id`` was committed (it may since have been
+        folded by a replacing write) — the streaming sink's epoch-replay
+        guard."""
         p = self._read_pointer(name)
-        if p is None:
-            return False
-        sid = int(segment_id)
-        if sid <= p.get("compacted_through", -1):
-            return True
-        return str(sid) in p.get("segments", {})
+        return p is not None and _acked(p["committed"], int(segment_id))
 
     def segment_count(self, name: str) -> int:
-        p = self._read_pointer(name) or {}
-        return len(p.get("dirs", []))
+        return len(self._current_dirs(name) or [])
 
     def append(self, name: str, df: DataFrame) -> None:
-        """Append sink (reference S8, INSERT...SELECT)."""
-        d = self._current_dir(name)
-        if d is None:
+        """Append sink (reference S8, INSERT...SELECT): a new segment under
+        the next free id; a missing table is created by ``overwrite``."""
+        p = self._read_pointer(name)
+        if p is None:
             self.overwrite(name, df)
         else:
-            df.write.mode("append").parquet(d)
+            committed = p["committed"]
+            self.append_segment(name, df, committed[-1][1] + 1 if committed else 0)
 
     def write_bucketed(
         self,
@@ -179,8 +200,8 @@ class TableCatalog:
     def write_partitioned(
         self, name: str, df: DataFrame, partition_cols: list[str]
     ) -> None:
-        """Hive-style partitioned table (dt=.../ directories) with the same
-        versioned-pointer atomicity as ``overwrite``.
+        """Hive-style partitioned table (dt=.../ directories), committed
+        like ``overwrite``.
 
         Partition pruning is the cluster-scale form of the reference's
         driver-side file skipping (S5/transaction.py:51 — don't read files
@@ -191,9 +212,10 @@ class TableCatalog:
         ≥1 file per value; a high-cardinality partition key degenerates
         into millions of tiny files and kills the scan.
         """
-        new_dir = os.path.join(self.root, f"{name}_v{self._next_version(name)}")
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(new_dir)
-        self._write_pointer(name, {"dir": new_dir})
+        self._commit(
+            name, df, f"v{self._next_version(name)}", replace=True,
+            partition_cols=partition_cols,
+        )
 
     def write_sorted(
         self, name: str, df: DataFrame, sort_cols: list[str], n_files: int
@@ -225,16 +247,17 @@ class TableCatalog:
         target_file_bytes: int = 128 * 1024 * 1024,
         cluster_by: list[str] | None = None,
     ) -> int:
-        """Rewrite a table into ~target-sized files; returns the new file
-        count.
+        """Rewrite a table into ~target-sized files in one directory;
+        returns the new file count.
 
-        Append sinks (S8) and streaming sinks accrete small files; at scale
-        a scan's task count — and the namenode's metadata load — is
-        file-bound, so periodic compaction is standing maintenance for any
-        append table. Sizing uses the CURRENT on-disk bytes (true post-
-        compression size), not row counts; the rewrite reuses the
-        versioned-pointer swap, so readers see either the old or the new
-        layout, never a mix.
+        Append sinks (S8) and streaming sinks accrete small files and
+        directories; at scale a scan's task count — and the namenode's
+        metadata load — is file-bound, so periodic compaction is standing
+        maintenance for any append table. Sizing uses the CURRENT on-disk
+        bytes (true post-compression size), not row counts; the rewrite
+        is an ``overwrite``, so readers see either the old or the new
+        layout, never a mix. It reads with ``mergeSchema``, so a column
+        that only later appends carry survives the fold.
 
         ``cluster_by`` re-CLUSTERS while compacting (the OPTIMIZE ...
         ZORDER BY maintenance verb): files get disjoint sort-key ranges
@@ -246,52 +269,31 @@ class TableCatalog:
         ds = self._current_dirs(name)
         if ds is None:
             raise FileNotFoundError(f"table {name} not initialized under {self.root}")
-        total = sum(
-            os.path.getsize(os.path.join(dirpath, f))
-            for d in ds
-            for dirpath, _, files in os.walk(d)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        total = sum(os.path.getsize(f) for d in ds for f in _parquet_files(d))
         n_files = max(1, -(-total // int(target_file_bytes)))
-        cur = self.read(name)
+        cur = self.spark.read.option("mergeSchema", "true").parquet(*ds)
         if cluster_by:
-            self.overwrite(
-                name,
-                cur.repartitionByRange(n_files, *cluster_by)
-                .sortWithinPartitions(*cluster_by),
+            cur = cur.repartitionByRange(n_files, *cluster_by).sortWithinPartitions(
+                *cluster_by
             )
-            new_dir = self._current_dir(name)
-            return sum(
-                1
-                for dirpath, _, files in os.walk(new_dir)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        self.overwrite(name, cur.repartition(n_files))
-        new_dir = self._current_dir(name)
-        return sum(
-            1
-            for dirpath, _, files in os.walk(new_dir)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        else:
+            cur = cur.repartition(n_files)
+        self.overwrite(name, cur)
+        [new_dir] = self._current_dirs(name)
+        return len(_parquet_files(new_dir))
 
     def versions(self, name: str) -> list[int]:
         """All retained version numbers of a table, oldest first.
 
-        ``overwrite``/``compact`` never delete prior version directories —
-        each rewrite is a full snapshot, so history is retained for free.
+        Replacing writes never delete prior version directories — each
+        rewrite is a full snapshot, so history is retained for free.
         """
-        import re
-
         pat = re.compile(rf"^{re.escape(name)}_v(\d+)$")
-        out = sorted(
+        return sorted(
             int(m.group(1))
             for d in os.listdir(self.root)
             if (m := pat.match(d)) and os.path.isdir(os.path.join(self.root, d))
         )
-        return out
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Time travel: read a specific retained snapshot of a table.
@@ -309,22 +311,27 @@ class TableCatalog:
         return self.spark.read.parquet(d)
 
     def vacuum(self, name: str, keep_last: int = 2) -> list[int]:
-        """Drop all but the newest ``keep_last`` version directories;
-        returns the dropped version numbers. The live pointer target is
-        never dropped. Retention is the storage-cost counterweight to
-        ``read_version`` — history is snapshots, so old versions cost
-        full-table storage until vacuumed."""
-        import shutil
-
+        """Drop all but the newest ``keep_last`` version directories, and
+        the segment directories of committed ids that a replacing write
+        folded away; returns the dropped version numbers. A live directory
+        and the directory of an uncommitted id (a crashed write its replay
+        will redo) are never dropped. Retention is the storage-cost
+        counterweight to ``read_version`` — history is snapshots, so old
+        versions cost full-table storage until vacuumed."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        live = set(self._current_dirs(name) or [])
-        vs = self.versions(name)
+        p = self._read_pointer(name) or {"dirs": [], "committed": []}
+        live = set(p["dirs"])
         dropped = []
-        for v in vs[:-keep_last] if keep_last < len(vs) else []:
+        for v in self.versions(name)[:-keep_last]:
             d = os.path.join(self.root, f"{name}_v{v}")
-            if d in live:
-                continue
-            shutil.rmtree(d)
-            dropped.append(v)
+            if d not in live:
+                shutil.rmtree(d)
+                dropped.append(v)
+        seg = re.compile(rf"^{re.escape(name)}_seg(\d+)$")
+        for f in os.listdir(self.root):
+            d = os.path.join(self.root, f)
+            m = seg.match(f)
+            if m and d not in live and _acked(p["committed"], int(m.group(1))):
+                shutil.rmtree(d)
         return dropped

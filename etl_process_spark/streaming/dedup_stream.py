@@ -28,8 +28,9 @@ checkpoint commit makes Spark re-run the epoch with the same data and
 the same epoch id):
 
 * Each segment commit is idempotent: segment directories are keyed by
-  epoch id, rewritten in place with deterministic content, and made
-  visible by one atomic pointer swap — so a replayed epoch re-commits
+  epoch id and made visible by one atomic pointer swap; a committed id
+  is never written again, and an uncommitted one's orphan directory is
+  rewritten with deterministic content — so a replayed epoch commits
   byte-equivalent state, and ``has_segment`` short-circuits epochs that
   already committed fully.
 * First write wins per document: already-indexed doc ids are anti-joined

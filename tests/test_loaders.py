@@ -2,6 +2,7 @@
 dated-inbox discovery/archival, watermark protocol."""
 
 import datetime as dt
+import json
 import os
 
 import pytest
@@ -71,6 +72,11 @@ def test_watermark_store(spark, tmp_path):
     assert store.get("fact") == "2021-01-02 09:00:00"
 
 
+def _pointer_keys(cat, name):
+    with open(os.path.join(cat.root, f"{name}.version.json")) as fh:
+        return set(json.load(fh))
+
+
 def test_catalog_compaction_merges_small_files(spark, tmp_path):
     """Many small appended files compact to few target-sized files with
     identical data, atomically (versioned-pointer swap)."""
@@ -82,15 +88,18 @@ def test_catalog_compaction_merges_small_files(spark, tmp_path):
             "ev",
             spark.range(batch * 100, (batch + 1) * 100).repartition(8),
         )
-    before_dir = cat._current_dir("ev")
-    n_before = sum(1 for f in os.listdir(before_dir) if f.endswith(".parquet"))
+    before_dirs = cat._current_dirs("ev")
+    n_before = sum(
+        1 for d in before_dirs for f in os.listdir(d) if f.endswith(".parquet")
+    )
     assert n_before >= 20  # genuinely fragmented
 
     n_after = cat.compact("ev", target_file_bytes=64 * 1024)
     assert n_after < n_before
     got = sorted(r["id"] for r in cat.read("ev").collect())
     assert got == list(range(500))
-    assert cat._current_dir("ev") != before_dir  # swapped, not in-place
+    # swapped, not in-place: no live directory is shared before and after
+    assert not set(cat._current_dirs("ev")) & set(before_dirs)
 
 
 def test_catalog_time_travel_and_vacuum(spark, tmp_path):
@@ -112,6 +121,15 @@ def test_catalog_time_travel_and_vacuum(spark, tmp_path):
 
     with _pytest.raises(FileNotFoundError, match="no version 0"):
         cat.read_version("dim", 0)
+
+    # an append lands in a new directory: the snapshot it follows keeps
+    # the rows that were written to it
+    cat.overwrite("t", spark.range(3))
+    assert _pointer_keys(cat, "t") == {"dirs", "committed"}
+    cat.append("t", spark.range(3, 5))
+    assert _pointer_keys(cat, "t") == {"dirs", "committed"}
+    assert cat.read_version("t", 0).count() == 3
+    assert cat.read("t").count() == 5
 
 
 def test_observed_metrics_ride_the_action(spark, tmp_path):
@@ -525,7 +543,8 @@ def test_compaction_with_clustering_restores_skipping(spark, tmp_path):
     n_after = cat.compact("ev", target_file_bytes=2 * 1024, cluster_by=["id"])
     assert n_after >= 2  # multiple files, so disjointness is non-vacuous
 
-    files = sorted(g.glob(str(cat._current_dir("ev")) + "/*.parquet"))
+    [live] = cat._current_dirs("ev")
+    files = sorted(g.glob(live + "/*.parquet"))
     ranges = []
     for f in files:
         md = pq.ParquetFile(f).metadata
@@ -567,15 +586,16 @@ def test_catalog_compaction_stress_200_files(spark, tmp_path):
     for _ in range(3):
         cat.append("ev", df.repartition(50))
 
-    live = cat._current_dir("ev")
+    live = cat._current_dirs("ev")
     n_before = sum(
-        1 for f in os.listdir(live) if f.endswith(".parquet")
+        1 for d in live for f in os.listdir(d) if f.endswith(".parquet")
     )
     assert n_before == 200
 
     total_bytes = sum(
-        os.path.getsize(os.path.join(live, f))
-        for f in os.listdir(live)
+        os.path.getsize(os.path.join(d, f))
+        for d in live
+        for f in os.listdir(d)
         if f.endswith(".parquet")
     )
     target = 1024 * 1024
@@ -589,11 +609,11 @@ def test_catalog_compaction_stress_200_files(spark, tmp_path):
 
     # version pruning: the scan must list files ONLY from the live
     # (post-compaction) version directory — history costs readers nothing
-    live_after = cat._current_dir("ev")
-    assert live_after != live
+    [live_after] = cat._current_dirs("ev")
+    assert live_after not in live
     scanned = cat.read("ev").inputFiles()
     assert scanned and all(live_after in f for f in scanned)
-    assert not any(live in f for f in scanned)
+    assert not any(d + "/" in f for d in live for f in scanned)
 
     # vacuum drops the stale 200-file snapshot; live read unaffected
     versions = cat.versions("ev")
@@ -624,7 +644,7 @@ def test_catalog_append_segment_log(spark, tmp_path):
     assert not cat.has_segment("t", 2)
     assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(8))
 
-    # replaying a segment id overwrites in place — no duplicate rows
+    # replaying a committed segment id writes nothing — no duplicate rows
     cat.append_segment("t", spark.range(5, 8).toDF("id"), 1)
     assert cat.segment_count("t") == 2
     assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(8))
@@ -645,3 +665,105 @@ def test_catalog_append_segment_log(spark, tmp_path):
     cat.overwrite("t", spark.range(0, 3).toDF("id"))
     assert cat.has_segment("t", 2) and cat.has_segment("t", 0)
     assert sorted(r["id"] for r in cat.read("t").collect()) == [0, 1, 2]
+    assert _pointer_keys(cat, "t") == {"dirs", "committed"}
+
+    # a gapped id stays uncommitted through a compaction
+    cat.append_segment("g", spark.range(0, 2).toDF("id"), 0)
+    cat.append_segment("g", spark.range(2, 4).toDF("id"), 2)
+    assert _pointer_keys(cat, "g") == {"dirs", "committed"}
+    cat.compact("g")
+    assert _pointer_keys(cat, "g") == {"dirs", "committed"}
+    assert cat.has_segment("g", 0) and cat.has_segment("g", 2)
+    assert not cat.has_segment("g", 1)
+
+    # vacuum removes the segment directories the compaction folded away
+    cat.vacuum("g", keep_last=1)
+    assert not [d for d in os.listdir(cat.root) if d.startswith("g_seg")]
+    assert sorted(r["id"] for r in cat.read("g").collect()) == [0, 1, 2, 3]
+    assert cat.has_segment("g", 0) and cat.has_segment("g", 2)
+
+    # a partitioned rewrite keeps the committed ids acked
+    cat.append_segment("p", spark.range(0, 4).toDF("id"), 0)
+    cat.write_partitioned(
+        "p", spark.range(0, 4).withColumn("k", F.col("id") % 2), ["k"]
+    )
+    assert _pointer_keys(cat, "p") == {"dirs", "committed"}
+    assert cat.has_segment("p", 0)
+    assert sorted(r["id"] for r in cat.read("p").collect()) == [0, 1, 2, 3]
+
+    cat.write_sorted("p", spark.range(0, 4).toDF("id"), ["id"], 2)
+    assert _pointer_keys(cat, "p") == {"dirs", "committed"}
+    assert cat.has_segment("p", 0)
+
+
+def test_catalog_long_log_through_compactions(spark, tmp_path):
+    """A long append stream whose caller compacts at a fixed cadence keeps
+    every row and every committed id across the folds, ``vacuum`` after a
+    fold leaves only the live directory, and the pointer does not grow
+    with contiguous ids."""
+    from etl_process_spark.sources.tables import TableCatalog
+
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    n, cadence = 40, 16
+    for i in range(n):
+        cat.append("a", spark.range(i, i + 1, numPartitions=1))
+        cat.append_segment("s", spark.range(i, i + 1, numPartitions=1), i)
+        for name in ("a", "s"):
+            assert cat.segment_count(name) <= cadence
+            if cat.segment_count(name) == cadence:
+                cat.compact(name)
+                cat.vacuum(name, keep_last=1)
+                assert cat.segment_count(name) == 1
+                assert not [
+                    d for d in os.listdir(cat.root)
+                    if d.startswith(f"{name}_seg")
+                ]
+    for name in ("a", "s"):
+        assert sorted(r["id"] for r in cat.read(name).collect()) == list(range(n))
+    # the first append created "a" by overwrite; the other n - 1 are ids
+    assert all(cat.has_segment("a", i) for i in range(n - 1))
+    assert not cat.has_segment("a", n - 1)
+    assert all(cat.has_segment("s", i) for i in range(n))
+    assert cat._read_pointer("s")["committed"] == [[0, n - 1]]
+
+
+def test_catalog_reads_older_pointer_formats(spark, tmp_path):
+    """A warehouse written before the one pointer format still works: a
+    ``{"dir"}`` pointer and a ``{"dirs", "segments", "compacted_through"}``
+    segment log read, acknowledge the ids they recorded, and take the one
+    format at their next commit."""
+    from etl_process_spark.sources.tables import TableCatalog
+
+    root = tmp_path / "wh"
+    cat = TableCatalog(spark, str(root))
+
+    def put(name, payload):
+        with open(root / f"{name}.version.json", "w") as fh:
+            json.dump(payload, fh)
+
+    spark.range(3).write.parquet(str(root / "t_v0"))
+    put("t", {"dir": str(root / "t_v0")})
+    assert cat.read("t").count() == 3
+    assert not cat.has_segment("t", 0)
+    cat.append("t", spark.range(3, 5))
+    assert _pointer_keys(cat, "t") == {"dirs", "committed"}
+    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(5))
+    assert cat.read_version("t", 0).count() == 3
+
+    spark.range(0, 2).write.parquet(str(root / "s_v0"))
+    spark.range(2, 4).write.parquet(str(root / "s_seg00000005"))
+    put("s", {
+        "dirs": [str(root / "s_v0"), str(root / "s_seg00000005")],
+        "segments": {"5": str(root / "s_seg00000005")},
+        "compacted_through": 3,
+    })
+    assert [cat.has_segment("s", i) for i in range(7)] == [
+        True, True, True, True, False, True, False
+    ]
+    cat.append_segment("s", spark.range(4, 5), 4)
+    assert _pointer_keys(cat, "s") == {"dirs", "committed"}
+    assert cat._read_pointer("s")["committed"] == [[0, 5]]
+    cat.compact("s")
+    cat.vacuum("s", keep_last=1)
+    assert not [d for d in os.listdir(root) if d.startswith("s_seg")]
+    assert sorted(r["id"] for r in cat.read("s").collect()) == list(range(5))

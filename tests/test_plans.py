@@ -557,10 +557,19 @@ def test_catalog_append_with_schema_evolution(spark, tmp_path):
     )
     cat.append("dim", v2)
     merged = spark.read.option("mergeSchema", "true").parquet(
-        cat._current_dir("dim")
+        *cat._current_dirs("dim")
     )
     assert set(merged.columns) == {"id", "name", "note"}
     rows = {r["id"]: r["note"] for r in merged.collect()}
+    assert rows == {1: None, 2: None, 3: "extra"}
+
+    # a compaction folds every directory without dropping the new column,
+    # also when the first segment predates it
+    cat.overwrite("dim2", v1.limit(1))
+    cat.append("dim2", v1.filter("id = 2"))
+    cat.append("dim2", v2)
+    cat.compact("dim2")
+    rows = {r["id"]: r["note"] for r in cat.read("dim2").collect()}
     assert rows == {1: None, 2: None, 3: "extra"}
 
 

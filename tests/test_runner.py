@@ -79,8 +79,11 @@ def _write_day2(inbox):
 
 
 def _table_files(wh, table):
-    """Every file under the table's version directories."""
-    return sorted(p for p in Path(wh).glob(f"{table}_v*/**/*") if p.is_file())
+    """Every file under the table's version and segment directories."""
+    return sorted(
+        p for pat in (f"{table}_v*/**/*", f"{table}_seg*/**/*")
+        for p in Path(wh).glob(pat) if p.is_file()
+    )
 
 
 def test_two_day_run_then_idempotent_rerun(spark, dims, tmp_path):
@@ -128,6 +131,16 @@ def test_two_day_run_then_idempotent_rerun(spark, dims, tmp_path):
         (F.col("event_type") == 3)
         & (F.col("event_dt") == dt.datetime(2024, 3, 2, 9, 30))
     ).count() == 1
+    # every night's report files store the columns in the first night's order
+    import pyarrow.parquet as pq
+
+    rep_dirs = cat._current_dirs("rep_fraud")
+    orders = {
+        tuple(pq.read_schema(str(f)).names)
+        for d in rep_dirs for f in Path(d).glob("*.parquet")
+    }
+    first = pq.read_schema(str(next(Path(rep_dirs[0]).glob("*.parquet")))).names
+    assert orders == {tuple(first)}
 
     # --- re-run with no new inputs: everything is a no-op -----------------
     before = sorted(map(tuple, rep.collect()))

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_process_spark.operators.text import tokens
+from etl_process_spark.session import checkpoint
 
 
 def shingles(text: Column | str, k: int = 3) -> Column:
@@ -634,9 +635,9 @@ def allpairs_jaccard(
         F.col(id_col).alias("doc"),
         F.array_distinct(shingles(F.col(text_col))).alias("sharr"),
     )
-    sh = toks.select(
-        "doc", F.explode("sharr").alias("sh")
-    ).localCheckpoint(eager=False)
+    sh = checkpoint(
+        toks.select("doc", F.explode("sharr").alias("sh")), eager=False
+    )
     dfq = sh.groupBy("sh").agg(F.count("*").alias("dfc"))
     ordered = _allpairs_ordered(sh, dfq)
     pref = _allpairs_prefix(ordered, num, den)
@@ -671,9 +672,9 @@ def allpairs_index(
         F.col(id_col).alias("doc"),
         F.array_distinct(shingles(F.col(text_col))).alias("sharr"),
     )
-    sh = toks.select(
-        "doc", F.explode("sharr").alias("sh")
-    ).localCheckpoint(eager=False)
+    sh = checkpoint(
+        toks.select("doc", F.explode("sharr").alias("sh")), eager=False
+    )
     dfq = sh.groupBy("sh").agg(F.count("*").alias("dfc"))
     ordered = _allpairs_ordered(sh, dfq)
     pref = _allpairs_prefix(ordered, num, den)
@@ -687,7 +688,7 @@ def _allpairs_ordered(sh: DataFrame, dfq: DataFrame) -> DataFrame:
     """Per-doc shingle arrays sorted by the (df, shingle) order; shingles
     absent from ``dfq`` (unseen at index time) rank as df 0 — rarest
     first, which is exactly where brand-new content belongs."""
-    return (
+    return checkpoint(
         sh.join(dfq, "sh", "left")
         .select(
             "doc",
@@ -697,8 +698,8 @@ def _allpairs_ordered(sh: DataFrame, dfq: DataFrame) -> DataFrame:
         )
         .groupBy("doc")
         .agg(F.array_sort(F.collect_list("s")).alias("a"))
-        .select("doc", F.expr("transform(a, x -> x.sh)").alias("t"))
-        .localCheckpoint(eager=False)
+        .select("doc", F.expr("transform(a, x -> x.sh)").alias("t")),
+        eager=False,
     )
 
 
@@ -789,11 +790,11 @@ def allpairs_probe(
         F.col(id_col).alias("doc"),
         F.array_distinct(shingles(F.col(text_col))).alias("sharr"),
     )
-    sh = toks.select(
-        "doc", F.explode("sharr").alias("sh")
-    ).localCheckpoint(eager=False)
+    sh = checkpoint(
+        toks.select("doc", F.explode("sharr").alias("sh")), eager=False
+    )
     ordered = _allpairs_ordered(sh, dfq)
-    pref = _allpairs_prefix(ordered, num, den).localCheckpoint(eager=False)
+    pref = checkpoint(_allpairs_prefix(ordered, num, den), eager=False)
     enc = ordered.select(
         "doc", F.expr("transform(t, s -> xxhash64(s))").alias("h")
     )
@@ -987,11 +988,11 @@ def simhash_dup_pairs(
     # sign-once: the signature table (doc, shs) feeds THREE subtrees
     # (the banded candidate join and both verify sides), and nothing
     # tells Catalyst they share the per-token md5 + 65-aggregate
-    # signature pass — un-materialized it computes 3x. localCheckpoint
+    # signature pass — un-materialized it computes 3x. A checkpoint
     # pins the doc-count-sized digest table (the image_phash
     # decode-once pattern; tiny at any corpus scale next to the token
     # stream it derives from).
-    sig = simhash_signatures(df, text_col, id_col).localCheckpoint(eager=False)
+    sig = checkpoint(simhash_signatures(df, text_col, id_col), eager=False)
     banded = sig.select("doc", F.posexplode("shs").alias("band", "bucket"))
     pairs = bucket_pairs(banded.select("doc", "band", "bucket"))
     a = sig.select(F.col("doc").alias("doc_a"), F.col("shs").alias("shs_a"))

@@ -10,8 +10,9 @@ Algorithm: every node starts labeled with itself; each round a node takes
 the min of its own label and its neighbors' labels; converged when no
 label changes. Rounds needed = graph diameter — near-dup clusters are
 small and dense (diameter ≤ 3-4 in practice), so the loop is short. Each
-round is one shuffle (join on node) + one aggregation; ``localCheckpoint``
-truncates the lineage so round N's plan doesn't re-analyze rounds 1..N-1.
+round is one shuffle (join on node) + one aggregation; a ``checkpoint``
+(``session.checkpoint``) truncates the lineage so round N's plan doesn't
+re-analyze rounds 1..N-1.
 
 The EVERY-round checkpoint is load-bearing, not an overhead to batch
 away: both round functions reference their input several times (labels
@@ -26,6 +27,11 @@ small-star algorithm (Kiveris et al., "Connected Components in MapReduce
 and Beyond", SoCC'14): pointer-jumping converges in O(log² n) rounds
 regardless of diameter, where min-label propagation needs diameter rounds
 — a 10⁶-hop path graph finishes in ~20 rounds instead of 10⁶.
+
+CC, label propagation and BFS keep their partitioned edge list
+``persisted`` only while they run: the last round is checkpointed
+eagerly, so the returned result reads only checkpoint blocks and the
+edge list is released on return.
 """
 
 from __future__ import annotations
@@ -33,15 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-# Optional bench-tooling hook (tools/bench_scale.py): called once per
-# iterative round with (tag, round_idx, pre_checkpoint_df,
-# post_checkpoint_df). The FINAL plan of an iterative query reads only
-# checkpointed RDDs — lineage truncation hides the per-round join — so
-# scale tooling installs a probe here to record each round's real
-# join/exchange shape (and to materialize the round so round N+1's
-# recorded plan doesn't accumulate rounds 1..N). Always None in
-# production paths; the engine never calls it.
-ROUND_PLAN_PROBE = None
+from etl_process_spark.session import checkpoint, persisted
 
 
 def connected_components(
@@ -56,58 +54,54 @@ def connected_components(
     ``edges`` may be directed/one-sided (e.g. ``doc_a < doc_b`` pairs);
     it is symmetrized internally. Returns (node, component) for every node
     that appears in at least one edge — callers union isolated nodes back
-    as their own singletons if needed.
+    as their own singletons if needed. The edge list is released on
+    return; every round's checkpoint is eager, so nothing reads it later.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # hash-partition the edge list ONCE on the aggregation key and keep
-    # it in storage (persist — localCheckpoint would erase the
+    # it in storage (persisted — a checkpoint would erase the
     # partitioning): whenever the planner attaches labels by broadcast
     # (AQE, labels fit), the join preserves hash(a) and the per-round
     # min-label groupBy(a) needs NO exchange — guide §2.4. In the
     # sort-merge regime (labels too big to broadcast) the round keeps
     # its former shape; the one-time repartition is the bounded cost.
-    sym = sym.distinct().repartition("a").persist()
-
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("comp").alias("nbr_comp"))
+    with persisted(sym.distinct().repartition("a")) as sym:
+        labels = checkpoint(
+            sym.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("comp", F.col("node"))
         )
-        # The convergence check rides the checkpoint's materialization
-        # job as an observed metric over rows that already carry both
-        # the old and the new label — one action per round, where the
-        # former new⋈old join + limit(1).count() cost a second job and
-        # an extra node-keyed shuffle join every round at any scale.
-        obs = Observation()
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-            .select(
-                "node",
-                F.col("comp").alias("old_comp"),
-                F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp")))
-                .alias("comp"),
+        for _ in range(max_iterations):
+            neighbor_min = (
+                sym.join(labels, sym.b == labels.node)
+                .groupBy("a")
+                .agg(F.min("comp").alias("nbr_comp"))
             )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum((F.col("comp") != F.col("old_comp")).cast("long")),
-                    F.lit(0),
-                ).alias("changed"),
+            # The convergence check rides the checkpoint's materialization
+            # job as an observed metric over rows that already carry both
+            # the old and the new label — one action per round, where the
+            # former new⋈old join + limit(1).count() cost a second job and
+            # an extra node-keyed shuffle join every round at any scale.
+            obs = Observation()
+            labels = checkpoint(
+                labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
+                .select(
+                    "node",
+                    F.col("comp").alias("old_comp"),
+                    F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
+                )
+                .observe(
+                    obs,
+                    F.coalesce(
+                        F.sum((F.col("comp") != F.col("old_comp")).cast("long")),
+                        F.lit(0),
+                    ).alias("changed"),
+                )
+                .select("node", "comp")
             )
-            .select("node", "comp")
-            .localCheckpoint()
-        )
-        labels = new_labels
-        if obs.get["changed"] == 0:
-            return labels.select(F.col("node"), F.col("comp").alias("component"))
+            if obs.get["changed"] == 0:
+                return labels.select(F.col("node"), F.col("comp").alias("component"))
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} rounds "
         "(graph diameter exceeds the bound — raise max_iterations)"
@@ -193,7 +187,7 @@ def connected_components_star(
     law: O(log² n) rounds independent of graph diameter, so this is the
     scale path for long-path / high-diameter graphs where min-label
     propagation would need one shuffle round per hop. Each round is two
-    shuffles (the two star steps); ``localCheckpoint`` truncates lineage
+    shuffles (the two star steps); a ``checkpoint`` truncates lineage
     between rounds.
 
     At the fixpoint the edge set is exactly the star forest
@@ -205,10 +199,8 @@ def connected_components_star(
     # nodes checkpoint re-scanned + re-shuffled the upstream pair
     # pipeline a second time just to materialize node ids that the
     # final isolated-union is the only consumer of.
-    e0 = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .distinct()
-        .localCheckpoint()
+    e0 = checkpoint(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
     )
     nodes = (
         e0.select(F.col("a").alias("node"))
@@ -224,14 +216,12 @@ def connected_components_star(
         # metric — the former separate _digest() aggregate job per round
         # is gone (same (count, order-independent hash-sum) fingerprint)
         obs = Observation()
-        e = (
-            _small_star_canonical(_large_star(e))
-            .observe(
+        e = checkpoint(
+            _small_star_canonical(_large_star(e)).observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.sum(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
             )
-            .localCheckpoint()
         )
         cur = (int(obs.get["n"]), int(obs.get["h"]))
         if cur == prev:
@@ -281,7 +271,7 @@ def pagerank_fixed_point(
     Two physical layouts, identical results:
 
     - ``adjacency=False`` (default): degree-annotated EDGE LIST,
-      symmetrized+distinct-ed once and localCheckpoint-ed. Per round one
+      symmetrized+distinct-ed once and checkpointed. Per round one
       contribution shuffle. Degree-unbounded — the layout for power-law
       graphs (a 1e8-degree web hub is just 1e8 edge rows, never one
       array).
@@ -315,18 +305,17 @@ def pagerank_fixed_point(
         else e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
     if adjacency:
-        adj = (
+        adj = checkpoint(
             both.groupBy("u")
             .agg(F.collect_set("v").alias("vs"))
             .withColumn("d", F.size("vs").cast("long"))
-            .localCheckpoint()
         )
-        nodes = adj.select(F.col("u").alias("node")).localCheckpoint()
+        nodes = checkpoint(adj.select(F.col("u").alias("node")))
     else:
-        sym = both.distinct().localCheckpoint()
+        sym = checkpoint(both.distinct())
         deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
         adj = sym.join(F.broadcast(deg) if broadcast_ranks else deg, on="u")
-        nodes = sym.select(F.col("u").alias("node")).distinct().localCheckpoint()
+        nodes = checkpoint(sym.select(F.col("u").alias("node")).distinct())
     n = nodes.count()
     base = ((100 - damping_pct) * unit) // (100 * n)
     ranks = nodes.withColumn("r", F.lit(unit // n).cast("long"))
@@ -347,7 +336,7 @@ def pagerank_fixed_point(
             ).cast("long").alias("r"),
         )
         if (i + 1) % checkpoint_interval == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint()
+            ranks = checkpoint(ranks)
     return ranks
 
 
@@ -391,10 +380,13 @@ def triangle_count(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFram
     a_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    d = ed.select(
-        F.when(a_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(a_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).localCheckpoint(eager=False)
+    d = checkpoint(
+        ed.select(
+            F.when(a_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(a_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+        ),
+        eager=False,
+    )
     adj = d.groupBy("a").agg(F.collect_set("b").alias("nbrs"))
     return (
         d.join(adj.select(F.col("a"), F.col("nbrs").alias("na")), "a")
@@ -431,8 +423,8 @@ def label_propagation(
 
     Shuffle shape (guide §2.4 — operations keyed the same way share one
     exchange): the symmetric edge list is hash-partitioned ONCE on the
-    collecting endpoint and kept in the storage layer with ``persist``
-    (``localCheckpoint`` would erase the partitioning — Spark rebuilds a
+    collecting endpoint and kept ``persisted`` in the storage layer for
+    the call (a checkpoint would erase the partitioning — Spark rebuilds a
     LogicalRDD with UnknownPartitioning). With ``broadcast_labels`` the
     per-round label attach is a broadcast join that preserves the
     streamed side's partitioning, and hash(a) satisfies the clustered
@@ -447,7 +439,8 @@ def label_propagation(
     join never reshuffles — only the O(nodes) label table moves. Skew
     is that of the former groupBy(node) exchange, just paid once. No
     adjacency materialization. Per-round labels are checkpointed like
-    the CC loop to keep lineage flat.
+    the CC loop to keep lineage flat: lazily, except the last round,
+    which is eager so the edge list can be released on return.
     """
     # input is canonical (src < dst, distinct): the reverse union cannot
     # collide, so no re-distinct
@@ -455,15 +448,15 @@ def label_propagation(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionAll(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .repartition("a" if broadcast_labels else "b")
-        .persist()
     )
-    labels = sym.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for _ in range(rounds):
-        labels = _lpa_round(sym, labels, broadcast_labels).localCheckpoint(
-            eager=False
+    with persisted(sym) as sym:
+        labels = sym.select(F.col("a").alias("node")).distinct().select(
+            "node", F.col("node").alias("label")
         )
+        for r in range(1, rounds + 1):
+            labels = checkpoint(
+                _lpa_round(sym, labels, broadcast_labels), eager=r == rounds
+            )
     return labels
 
 
@@ -530,7 +523,8 @@ def bfs_distances(
     enter the distinct's exchange (same rows out either way;
     filter∘distinct ≡ distinct∘filter). Each hop's frontier is
     checkpointed like the CC loop so round N's plan doesn't replay
-    rounds 1..N-1.
+    rounds 1..N-1 — lazily, except the last hop: its eager checkpoint
+    materializes every hop, so the edge list is released on return.
 
     BFS is insensitive to duplicate edges (the per-round neighbor
     distinct absorbs them), so callers holding an UN-deduplicated
@@ -545,32 +539,33 @@ def bfs_distances(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
         )
     # hash-partition the edge list ONCE on the neighbor endpoint and
-    # persist (not localCheckpoint, which erases partitioning): while
+    # keep it persisted (a checkpoint would erase partitioning): while
     # the frontier rides a broadcast join — every hop here — candidate
     # neighbors arrive already hash(b)-clustered, so each hop's
     # ``distinct`` (keyed on n ≡ b) needs NO exchange: hops × candidate
     # exchanges collapse into this one edge shuffle (guide §2.4).
-    sym = sym.repartition("b").persist()
-    dist = seeds.select(F.col(node).alias("n")).distinct().select(
-        "n", F.lit(0).cast("int").alias("dist")
-    ).localCheckpoint(eager=False)
-    frontier = dist.select("n")
-    for hop in range(1, max_hops + 1):
-        nbrs = (
-            frontier.join(sym, frontier.n == sym.a)
-            .select(F.col("b").alias("n"))
-            .join(dist.select("n"), "n", "left_anti")
-            .distinct()
+    with persisted(sym.repartition("b")) as sym:
+        dist = checkpoint(
+            seeds.select(F.col(node).alias("n")).distinct().select(
+                "n", F.lit(0).cast("int").alias("dist")
+            ),
+            eager=False,
         )
-        pre = nbrs.select("n", F.lit(hop).cast("int").alias("dist"))
-        new = pre.localCheckpoint(eager=False)
-        if ROUND_PLAN_PROBE is not None:
-            # bench tooling: record THIS round's join/exchange shape
-            # before localCheckpoint truncates it out of the final plan
-            ROUND_PLAN_PROBE("bfs", hop, pre, new)
-        # dist is a union of already-checkpointed per-hop frames — no
-        # lineage to truncate, so checkpointing the union again would
-        # only re-materialize the same rows every round
-        dist = dist.unionAll(new)
-        frontier = new.select("n")
+        frontier = dist.select("n")
+        for hop in range(1, max_hops + 1):
+            nbrs = (
+                frontier.join(sym, frontier.n == sym.a)
+                .select(F.col("b").alias("n"))
+                .join(dist.select("n"), "n", "left_anti")
+                .distinct()
+            )
+            new = checkpoint(
+                nbrs.select("n", F.lit(hop).cast("int").alias("dist")),
+                eager=hop == max_hops,
+            )
+            # dist is a union of already-checkpointed per-hop frames — no
+            # lineage to truncate, so checkpointing the union again would
+            # only re-materialize the same rows every round
+            dist = dist.unionAll(new)
+            frontier = new.select("n")
     return dist.select(F.col("n").alias(node), "dist")

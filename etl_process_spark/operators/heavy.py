@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from etl_process_spark.session import checkpoint
+
 
 def _mg_summarize(
     key_cols: list[str], capacity: int
@@ -99,10 +101,9 @@ def heavy_hitters(
         [in_fields[c] for c in key_cols]
         + [StructField("__est", LongType()), StructField("__marker", BooleanType())]
     )
-    summaries = (
+    summaries = checkpoint(  # one scan feeds both N and the candidate agg
         df.select(*key_cols)
         .mapInPandas(_mg_summarize(key_cols, capacity), out_schema)
-        .localCheckpoint()  # one scan feeds both N and the candidate agg
     )
     n_total = (
         summaries.filter(F.col("__marker")).agg(F.sum("__est")).first()[0] or 0

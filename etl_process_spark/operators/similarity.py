@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_process_spark.session import checkpoint
+
 # The test corpus's embedding dimensionality (embeddings.parquet).
 # Shared by every static-dim unrolled dot/norm call site: with ANSI off,
 # element_at past the array end returns NULL, so a silently-wrong dim
@@ -147,7 +149,9 @@ def ivf_centroids(
     posexplode (a ×dim map-side row multiplication at any scale) and
     one exchange instead of two. Component values are bit-identical:
     identical per-element floor(v·10⁶) BIGINT terms, summed per cell
-    either way, one final division each.
+    either way, one final division each — under the fast path's contract
+    that every non-null vector has exactly ``dim`` non-null elements. NULL
+    vectors are skipped on both paths (``count(vec_col)`` is the divisor).
     """
     if dim is not None:
         # whole-expression SQL strings: one parser round-trip per
@@ -161,7 +165,7 @@ def ivf_centroids(
             for i in range(1, dim + 1)
         ]
         agg = df.groupBy(F.col(cell_col).alias("cell")).agg(
-            sums[0], *sums[1:], F.expr("count(1) AS _n")
+            sums[0], *sums[1:], F.expr(f"count(`{vec_col}`) AS _n")
         )
         arr = ", ".join(
             f"CAST(_s{i} AS DOUBLE) / (_n * 1000000.0)"
@@ -640,7 +644,7 @@ def kmeans_lloyd(
     only (cluster, dim) partial sums thanks to map-side combine —
     centroid-sized, independent of corpus size, the same contract as
     ``ivf_centroids``. Lineage per round is cut with a lazy
-    localCheckpoint. Ties (equidistant centroids) break to the lower
+    checkpoint. Ties (equidistant centroids) break to the lower
     cluster id in every engine.
     """
     from pyspark.sql import Window
@@ -658,7 +662,7 @@ def kmeans_lloyd(
     for r in range(rounds):
         scored = _assign(v, cents)
         if r < rounds - 1:
-            cents = (
+            cents = checkpoint(
                 scored.select("cluster", F.posexplode("v").alias("dim", "val"))
                 .groupBy("cluster", "dim")
                 # exact-e6 quantized mean — same contract as ivf_centroids
@@ -676,8 +680,8 @@ def kmeans_lloyd(
                         F.array_sort(F.collect_list(F.struct("dim", "m"))),
                         lambda s: s["m"],
                     ).alias("c")
-                )
-                .localCheckpoint(eager=False)
+                ),
+                eager=False,
             )
     return scored.select("vid", "cluster"), cents
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_process_spark.session import checkpoint
+
 # Stopword markers per language for the n-gram/stopword language heuristic.
 # Deliberately tiny: language ID at pipeline scale is a cheap prior, not a
 # model. Extend per corpus.
@@ -320,7 +322,7 @@ def bpe_merge_rounds_delta(
     pairs) — shrinking as merges get rarer — instead of O(vocab pairs);
     the asymmetry that makes a 50k-merge tokenizer trainable over
     100 TB. The vocab rewrite itself stays a full map (replace is a
-    no-op on untouched rows). localCheckpoint EVERY round keeps the two
+    no-op on untouched rows). A checkpoint EVERY round keeps the two
     iterated lineages (stream + counts) flat — mandatory here, not a
     knob: an un-checkpointed round references the prior counts lineage
     twice (directly in the unionAll and again through winner→aff→delta),
@@ -337,8 +339,8 @@ def bpe_merge_rounds_delta(
     at production round counts). Counting forces one extra action per
     round against the checkpointed stream; leave None in production.
     """
-    wrapped = _weighted_vocab(df, text_col).localCheckpoint(eager=False)
-    counts = _pair_counts(wrapped).localCheckpoint(eager=False)
+    wrapped = checkpoint(_weighted_vocab(df, text_col), eager=False)
+    counts = checkpoint(_pair_counts(wrapped), eager=False)
     out: DataFrame | None = None
     for r in range(1, rounds + 1):
         winner = counts.orderBy(F.col("n").desc(), F.col("pair").asc()).limit(1)
@@ -396,9 +398,8 @@ def bpe_merge_rounds_delta(
             .agg(F.sum("n").alias("n"))
             .filter(F.col("n") > 0)
         )
-        wrapped = _bpe_rewrite(wrapped, winner)
-        wrapped = wrapped.localCheckpoint(eager=False)
-        counts = counts.localCheckpoint(eager=False)
+        wrapped = checkpoint(_bpe_rewrite(wrapped, winner), eager=False)
+        counts = checkpoint(counts, eager=False)
     assert out is not None
     return out
 

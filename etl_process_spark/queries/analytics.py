@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_process_spark.queries.registry import query, tbl
+from etl_process_spark.session import checkpoint
 
 # Heavy-basket guard for the co-purchase graph family: per order, only
 # the cap smallest partkeys generate pairs (deterministic truncation —
@@ -1533,7 +1534,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy local checkpoint: the deduped edge set feeds four plan
     # references (orientation, two degree attaches, wedge close + the
     # degree/wedge aggregates below); materialize it once, at first use
-    e = pairs.distinct().localCheckpoint(eager=False)
+    e = checkpoint(pairs.distinct(), eager=False)
     tri = triangle_count(e)
     deg = (
         e.select(F.col("u").alias("node"))

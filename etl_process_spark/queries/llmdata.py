@@ -18,6 +18,7 @@ from etl_process_spark.operators import dedup as dd
 from etl_process_spark.operators import similarity as sim
 from etl_process_spark.operators import text as tx
 from etl_process_spark.queries.registry import query, tbl
+from etl_process_spark.session import checkpoint
 
 # DuckDB-side mirrors of the tokenization / shingle contract.
 _TOKS = "string_split_regex(trim(lower(text)), '\\s+')"
@@ -2391,9 +2392,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs' rows sum to the target counts, the rest to the raw counts)
     # — so the text is exploded and shuffled exactly once.
     is_tgt = F.col("doc_id") % 50 == 0
-    perdoc_all = grams.groupBy("doc_id", "bucket").agg(
+    perdoc_all = checkpoint(grams.groupBy("doc_id", "bucket").agg(
         F.count("*").alias("c")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     sides = perdoc_all.groupBy("bucket").agg(
         F.sum(F.when(is_tgt, F.col("c")).otherwise(0)).alias("ct"),
         F.sum(F.when(~is_tgt, F.col("c")).otherwise(0)).alias("cr"),
@@ -3133,7 +3134,7 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rarity df count, the rare-posting join, and both verify sides);
     # un-materialized, the tokenize + trigram explode re-ran per
     # reference — checkpoint once, like allpairs_jaccard's sh table
-    sh = toks.select(
+    sh = checkpoint(toks.select(
         "doc_id",
         F.explode(
             F.expr(
@@ -3141,7 +3142,7 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " i -> concat_ws(' ', slice(w, i+1, 3))))"
             )
         ).alias("s"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     rare = (
         sh.groupBy("s")
@@ -3150,7 +3151,7 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s")
     )
     # referenced by both sides of the candidate self-join
-    rare_posts = sh.join(rare, "s").localCheckpoint(eager=False)
+    rare_posts = checkpoint(sh.join(rare, "s"), eager=False)
     cand = (
         rare_posts.alias("a")
         .join(rare_posts.alias("b"), "s")

@@ -32,6 +32,7 @@ from etl_process_spark.multimodal.ops import (
     sample_packed_frames,
 )
 from etl_process_spark.queries.registry import query, tbl  # noqa: F401
+from etl_process_spark.session import checkpoint
 
 # ---- shared SQL fragments for the synthetic pixel rule -------------------
 # gid = doc_id - doc_id % 2 (pair groups); hx = md5(gid); h/w = 32 + byte % 65;
@@ -256,12 +257,12 @@ def image_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decode-once discipline: the digest table feeds three plan branches
     # (h1/h2 halves + the band self-join's two sides) — without
     # materialization Spark re-synthesizes and re-DECODES the corpus per
-    # branch. localCheckpoint(eager=False) pins the tiny digest table
-    # (16 chars/asset) after one decode pass; blocks are freed when the
+    # branch. A lazy checkpoint pins the tiny digest table (16
+    # chars/asset) after one decode pass; blocks are freed when the
     # DataFrame is GC'd.
-    ph = phash_images(
-        synthesize_image_assets(spark, sf_dir)
-    ).localCheckpoint(eager=False)
+    ph = checkpoint(
+        phash_images(synthesize_image_assets(spark, sf_dir)), eager=False
+    )
     p = ph.select(
         "asset_id",
         F.conv(F.substring("phash", 1, 8), 16, 10).cast("long").alias("h1"),
@@ -615,10 +616,10 @@ def wav_fingerprint_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # decode-once: both self-join sides read the same fingerprint
     # stream — one WAV decode pass, then digests only
-    words = audio_fingerprint_words(
+    words = checkpoint(audio_fingerprint_words(
         synthesize_paired_audio_assets(spark, sf_dir),
         frame=_FP_FRAME, hop=_FP_HOP, n_bands=_FP_NBANDS,
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     a, b = words.alias("a"), words.alias("b")
     return (
         a.join(
@@ -725,12 +726,12 @@ def wav_fingerprint_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # decode-once: the stream feeds the df fence AND both join sides —
     # one WAV decode pass, then integers only
-    words = audio_fingerprint_words(
+    words = checkpoint(audio_fingerprint_words(
         synthesize_paired_audio_assets(
             spark, sf_dir, max_shift_hops=_FP_MAX_SHIFT, hop=_FP_OHOP
         ),
         frame=_FP_FRAME, hop=_FP_OHOP, n_bands=_FP_NBANDS,
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     keep = (
         words.groupBy("word")
         .agg(F.countDistinct("asset_id").alias("df"))
@@ -936,9 +937,9 @@ def video_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # decode-once: frame digests feed the hash halves AND both sides of
     # the band self-join — materialize after a single container walk
-    ph = packed_frame_phash(
+    ph = checkpoint(packed_frame_phash(
         synthesize_paired_video_assets(spark, sf_dir)
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     p = ph.select(
         "asset_id", "frame_idx",
         F.conv(F.substring("phash", 1, 8), 16, 10).cast("long").alias("h1"),

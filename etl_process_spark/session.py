@@ -12,16 +12,20 @@ bench, driver contract) runs with identical semantics:
   right at sf0.001 and at 100 TB.
 * shuffle partitions sized to the local core count; at cluster scale this is
   overridden by AQE's coalescing + the submitter's conf.
+
+It also owns how long materialized data lives: engine code checkpoints
+only through ``checkpoint`` and persists only through ``persisted``.
 """
 
 from __future__ import annotations
 
-import functools
+import contextlib
 import os
 import re
 import warnings
+from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -59,55 +63,43 @@ def _broadcast_threshold(driver_mem: str) -> int:
     return max(4 * 1024 * 1024, min(64 * 1024 * 1024, heap // 256))
 
 
-def _install_ckpt_replication() -> None:
-    """Executor-loss resilience for the iterative operators.
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` under the replica policy.
 
-    The engine's iterative loops (graph CC/BFS/label-prop, delta BPE,
-    k-means) truncate lineage with ``localCheckpoint`` — the right
-    speed choice, but local checkpoint blocks live on ONE executor
-    with no lineage to rebuild from, so losing that executor aborts
-    the query (Spark's documented localCheckpoint trade-off; the
-    orchestrator-level answer is a deterministic job retry, proven in
-    EXECUTORLOSS_DETERMINISM.json). For clusters where in-flight
-    survival matters more than the replication write cost,
-    ``SPARK_GRAFT_CHECKPOINT_REPLICAS=2`` switches every
-    ``localCheckpoint`` call that doesn't name its own storage level
-    to ``MEMORY_AND_DISK_2`` — each block gets a second replica on
-    another executor, so one lost worker leaves every block readable
-    and recovery is ordinary stage resubmission.
-
-    Installed as a default-argument wrapper on the classic DataFrame
-    (the env var is read per CALL, so one process can rehearse both
-    modes); with the variable unset the wrapper is a pass-through.
+    Local checkpoint blocks (iterative loops, shared subtrees) live on ONE
+    executor with no lineage to rebuild from, so losing that executor
+    aborts the query (Spark's documented trade-off; the orchestrator's
+    answer is a deterministic job retry, EXECUTORLOSS_DETERMINISM.json).
+    ``SPARK_GRAFT_CHECKPOINT_REPLICAS=2`` stores every block as
+    ``MEMORY_AND_DISK_2`` instead — a second replica on another executor,
+    so one lost worker leaves every block readable. The policy is read on
+    each call, on every session, including one built outside the engine
+    and passed to ``configure_session``; unset, this is exactly
+    ``df.localCheckpoint(eager)``.
     """
+    return df.localCheckpoint(eager, storageLevel=_ckpt_storage_level())
+
+
+@contextlib.contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """``df.persist()`` for a ``with`` block, released however it exits.
+
+    For data that must keep its partitioning (a checkpoint erases it).
+    What is read after the block must be materialized inside it (an eager
+    ``checkpoint``): a cached plan left behind is served to any later
+    plan-identical subtree, in this query or the next.
+    """
+    held = df.persist()
     try:
-        # pyspark >= 4.0 moved the eager DataFrame here
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # pyspark 3.x
-        from pyspark.sql.dataframe import DataFrame
-
-    if getattr(DataFrame, "_graft_ckpt_wrapped", False):
-        return
-    orig = DataFrame.localCheckpoint
-
-    @functools.wraps(orig)
-    def localCheckpoint(self, eager: bool = True, storageLevel=None):
-        if storageLevel is None:
-            storageLevel = _ckpt_storage_level()
-        if storageLevel is None:
-            # don't pass the kwarg at all: pyspark 3.x's signature is
-            # localCheckpoint(eager) and rejects a storageLevel argument
-            return orig(self, eager)
-        return orig(self, eager, storageLevel=storageLevel)
-
-    DataFrame.localCheckpoint = localCheckpoint
-    DataFrame._graft_ckpt_wrapped = True
+        yield held
+    finally:
+        held.unpersist()
 
 
 def _ckpt_storage_level():
-    """The storage-level override the wrapper applies: None when
+    """The storage level ``checkpoint`` requests: None when
     replication is off, MEMORY_AND_DISK_2 when it is on. (Separated from
-    the wrapper so the decision is unit-testable without a cluster that
+    ``checkpoint`` so the decision is unit-testable without a cluster that
     can actually PLACE a second replica — local modes have no peer and
     Spark degrades the reported level to replication=1.)"""
     if _ckpt_replicas() < 2:
@@ -147,7 +139,6 @@ def _ckpt_replicas() -> int:
 def get_spark(app_name: str = "etl_process_spark", master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Return (create if needed) the engine's SparkSession."""
-    _install_ckpt_replication()
     # transformWithStateInPandas workers import google.protobuf; this
     # container has none, so activate the vendored mini-runtime. Must
     # happen BEFORE the JVM starts: workers inherit PYTHONPATH through

@@ -62,6 +62,7 @@ from etl_process_spark.operators.dedup import (
     lsh_bands,
     probe_pairs_from_bands,
 )
+from etl_process_spark.session import persisted
 from etl_process_spark.sources.tables import TableCatalog
 
 INDEX_TABLE = "lsh_band_index"
@@ -80,19 +81,21 @@ def neardup_sink(catalog: TableCatalog, text_col: str, id_col: str):
         index_done = catalog.has_segment(INDEX_TABLE, eid)
         if pairs_done and index_done:
             return  # fully-committed epoch replayed: nothing to redo
-        if catalog.exists(INDEX_TABLE):
-            index = catalog.read(INDEX_TABLE)
+        index = catalog.read(INDEX_TABLE) if catalog.exists(INDEX_TABLE) else None
+        if index is not None:
             # first-write-wins: drop already-indexed docs before banding
             # (re-delivery, or a replay that crashed mid-epoch) — their
             # bands AND pairs were committed when they first arrived
             indexed = index.select(F.col("doc").alias(id_col)).distinct()
-            fresh = batch.join(indexed, id_col, "left_anti")
-            fresh_bands = lsh_bands(fresh, text_col, id_col).persist()
-            pairs = probe_pairs_from_bands(index, fresh_bands)
-        else:
-            fresh_bands = lsh_bands(batch, text_col, id_col).persist()
-            pairs = bucket_pairs(fresh_bands)
-        try:
+            batch = batch.join(indexed, id_col, "left_anti")
+        # the epoch's bands feed both the pair probe and the index
+        # segment: band the batch once, and release the bands when the
+        # epoch's commits are done (or have failed)
+        with persisted(lsh_bands(batch, text_col, id_col)) as fresh_bands:
+            pairs = (
+                bucket_pairs(fresh_bands) if index is None
+                else probe_pairs_from_bands(index, fresh_bands)
+            )
             # pairs BEFORE index (see module docstring: the reverse order
             # loses a crashed epoch's pairs on replay)
             if not pairs_done:
@@ -100,8 +103,6 @@ def neardup_sink(catalog: TableCatalog, text_col: str, id_col: str):
                     PAIRS_TABLE, pairs.select("doc_a", "doc_b"), eid
                 )
             catalog.append_segment(INDEX_TABLE, fresh_bands, eid)
-        finally:
-            fresh_bands.unpersist()
 
     return apply
 

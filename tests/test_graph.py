@@ -160,6 +160,26 @@ def test_triangle_count_known_and_random(spark):
     assert triangle_count(e2).collect()[0][0] == naive
 
 
+def _py_lpa(edge_list, rounds):
+    """Straight-line Python simulation of synchronous LPA with
+    (count desc, label asc) ties."""
+    adj: dict[int, list[int]] = {}
+    for a, b in edge_list:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    labels = {n: n for n in adj}
+    for _ in range(rounds):
+        new = {}
+        for n, nbrs in adj.items():
+            cnt: dict[int, int] = {}
+            for m in nbrs:
+                cnt[labels[m]] = cnt.get(labels[m], 0) + 1
+            best = max(cnt.values())
+            new[n] = min(l for l, c in cnt.items() if c == best)
+        labels = new
+    return labels
+
+
 def test_label_propagation_matches_simulation(spark):
     """Synchronous LPA with (count desc, label asc) ties must equal a
     straight-line Python simulation of the same rule, round for round."""
@@ -172,21 +192,7 @@ def test_label_propagation_matches_simulation(spark):
     edges = sorted(
         {(a, b) for a in nodes for b in nodes if a < b and rng.random() < 0.15}
     )
-    # python simulation
-    adj: dict[int, list[int]] = {}
-    for a, b in edges:
-        adj.setdefault(a, []).append(b)
-        adj.setdefault(b, []).append(a)
-    labels = {n: n for n in adj}
-    for _ in range(3):
-        new = {}
-        for n, nbrs in adj.items():
-            cnt: dict[int, int] = {}
-            for m in nbrs:
-                cnt[labels[m]] = cnt.get(labels[m], 0) + 1
-            best = max(cnt.values())
-            new[n] = min(l for l, c in cnt.items() if c == best)
-        labels = new
+    labels = _py_lpa(edges, 3)
     e = spark.createDataFrame(edges, ["u", "v"])
     for bc in (False, True):
         got = {r["node"]: r["label"] for r in
@@ -339,3 +345,61 @@ def test_label_propagation_round_is_exchange_free(spark):
         ref_labels = _lpa_round(ref_sym, ref_labels, broadcast_labels=False)
     ref = {(r["node"], r["label"]) for r in ref_labels.collect()}
     assert got == ref
+
+
+def _assert_only_checkpoints_left(spark):
+    """No CacheManager entry survives, and every persisted RDD left in
+    the session is a local-checkpoint block (reclaimed by the
+    ContextCleaner once its DataFrame dies)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), "a cached plan outlived the operator"
+    held = [
+        rdd.toDebugString()
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values()
+        if not rdd.rdd().isLocallyCheckpointed()
+    ]
+    assert held == [], held
+
+
+def _release_all(spark):
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
+
+
+# chain 1-2-3-4-5, and a triangle 10-11-12 with a tail 12-13-14
+_TOY = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (11, 12),
+        (12, 13), (13, 14)]
+
+
+@pytest.mark.parametrize("op", ["cc", "lpa", "lpa_broadcast", "bfs"])
+def test_graph_operators_release_their_edge_list(spark, op):
+    """CC, LPA and BFS hold their edge list only while they run: once the
+    returned result is materialized, the session holds no cached plan
+    and no persisted RDD but local-checkpoint blocks. A cached edge list
+    that outlives the call is served by the CacheManager to any later
+    plan-identical subtree, in this query or the next."""
+    from etl_process_spark.operators.graph import (
+        bfs_distances,
+        connected_components,
+        label_propagation,
+    )
+
+    _release_all(spark)
+    e = spark.createDataFrame(_TOY, "u long, v long")
+    if op == "cc":
+        got = {(r["node"], r["component"])
+               for r in connected_components(e, "u", "v").collect()}
+        want = _bfs_components(_TOY)
+    elif op == "bfs":
+        seeds = spark.createDataFrame([(1,), (10,)], "node long")
+        got = {(r["node"], r["dist"])
+               for r in bfs_distances(e, seeds, max_hops=3).collect()}
+        want = _py_bfs_distances(_TOY, {1, 10}, 3)
+    else:
+        out = label_propagation(e, rounds=2,
+                                broadcast_labels=op == "lpa_broadcast")
+        got = {(r["node"], r["label"]) for r in out.collect()}
+        want = set(_py_lpa(_TOY, 2).items())
+    assert got == want
+    _assert_only_checkpoints_left(spark)

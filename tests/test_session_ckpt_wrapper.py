@@ -1,12 +1,14 @@
-"""The localCheckpoint replication wrapper: install, pass-through, parse.
+"""The checkpoint replica policy: ``checkpoint``, ``persisted``, parse.
 
-Round-10 added ``SPARK_GRAFT_CHECKPOINT_REPLICAS`` (session.py:
-_install_ckpt_replication) so the iterative operators' localCheckpoint
-blocks can be upgraded to MEMORY_AND_DISK_2 for in-flight executor-loss
-survival. This pins the contract the judge asked for: the wrapper
-installs exactly once, is a byte-for-byte pass-through when the env var
-is unset, honors any integer >= 2 (not just the literal "2"), and warns
-loudly — instead of silently staying off — on malformed values.
+``SPARK_GRAFT_CHECKPOINT_REPLICAS`` lets the engine's local-checkpoint
+blocks be upgraded to MEMORY_AND_DISK_2 for in-flight executor-loss
+survival. ``session.checkpoint`` applies it on every call, on any
+session, so this pins: a pass-through when the variable is unset, the
+replicated level on request — including on a session the engine did not
+build (``configure_session``) — no patch on pyspark's own
+``DataFrame.localCheckpoint``, any integer >= 2 (not just the literal
+"2") honoured, and a loud warning instead of silently staying off on
+malformed values.
 """
 
 from __future__ import annotations
@@ -14,16 +16,31 @@ from __future__ import annotations
 import warnings
 
 import pytest
+from pyspark.storagelevel import StorageLevel
 
 from etl_process_spark import session as S
 
 
 def _dataframe_cls():
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # pragma: no cover - pyspark 3.x
-        from pyspark.sql.dataframe import DataFrame
+    from pyspark.sql.classic.dataframe import DataFrame
+
     return DataFrame
+
+
+@pytest.fixture
+def requested(monkeypatch):
+    """Record the (eager, storageLevel) each ``localCheckpoint`` call
+    asks for, then run the real one."""
+    DataFrame = _dataframe_cls()
+    orig = DataFrame.localCheckpoint
+    calls = []
+
+    def spy(self, eager=True, storageLevel=None):
+        calls.append((eager, storageLevel))
+        return orig(self, eager, storageLevel=storageLevel)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    return calls
 
 
 def test_parse_unset(monkeypatch):
@@ -54,40 +71,63 @@ def test_parse_malformed_warns_and_disables(monkeypatch):
     assert any("not an integer" in str(x.message) for x in w)
 
 
-def test_wrapper_installed_once(spark):
+def test_localcheckpoint_is_unpatched(spark, requested):
+    # the session leaves pyspark's DataFrame alone: the policy lives in
+    # checkpoint(), which forwards eager as given
     DataFrame = _dataframe_cls()
-    assert getattr(DataFrame, "_graft_ckpt_wrapped", False)
-    fn = DataFrame.localCheckpoint
-    S._install_ckpt_replication()  # idempotent: second install is a no-op
-    assert DataFrame.localCheckpoint is fn
-    # functools.wraps preserved the pyspark identity for introspection
-    assert fn.__name__ == "localCheckpoint"
-    assert fn.__wrapped__ is not fn
+    assert not hasattr(DataFrame, "_graft_ckpt_wrapped")
+    assert not hasattr(S, "_install_ckpt_replication")
+    df = S.checkpoint(spark.range(10), eager=False)
+    assert requested == [(False, S._ckpt_storage_level())]
+    assert df.count() == 10
 
 
-def test_wrapper_passthrough_when_unset(spark, monkeypatch):
+def test_checkpoint_passthrough_when_unset(spark, monkeypatch, requested):
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_REPLICAS", raising=False)
-    df = spark.range(100).localCheckpoint()
-    lvl = df.rdd.getStorageLevel()
-    assert lvl.replication == 1
+    df = S.checkpoint(spark.range(100))
+    assert requested == [(True, None)]
+    assert df.rdd.getStorageLevel().replication == 1
     assert df.count() == 100
     df.unpersist(True)
 
 
-def test_wrapper_replicates_when_set(spark, monkeypatch):
+def test_checkpoint_replicates_when_set(spark, monkeypatch, requested):
     # local[4] has one block manager, so a second replica cannot LAND
     # anywhere (Spark degrades the reported level to replication=1) —
-    # the wrapper's contract is the REQUESTED level, pinned via the
-    # decision helper; the multi-host placement itself is proven by the
-    # minicluster rehearsal (EXECUTORLOSS_DETERMINISM.json
-    # replicated_leg). The query must still run correctly through the
-    # degraded path.
+    # the contract is the REQUESTED level; the multi-host placement
+    # itself is proven by the minicluster rehearsal
+    # (EXECUTORLOSS_DETERMINISM.json replicated_leg). The query must
+    # still run correctly through the degraded path.
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_REPLICAS", "2")
-    lvl = S._ckpt_storage_level()
-    assert lvl is not None and lvl.replication == 2
-    df = spark.range(100).localCheckpoint()
+    df = S.checkpoint(spark.range(100))
+    assert requested == [(True, StorageLevel.MEMORY_AND_DISK_2)]
     assert df.count() == 100
     df.unpersist(True)
+
+
+def test_checkpoint_replicates_on_configure_session_path(monkeypatch, requested):
+    # the entry-point contract hands the engine a session built outside
+    # it (__spark_entry__ -> configure_session): get_spark never runs,
+    # and the policy must hold all the same
+    from pyspark.sql import SparkSession
+
+    spark = S.configure_session(SparkSession.builder.getOrCreate())
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_REPLICAS", "2")
+    df = S.checkpoint(spark.range(100))
+    assert requested == [(True, StorageLevel.MEMORY_AND_DISK_2)]
+    assert df.count() == 100
+    df.unpersist(True)
+
+
+def test_persisted_releases_on_exit(spark):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError):
+        with S.persisted(spark.range(50)) as df:
+            assert df.count() == 50
+            assert not cm.isEmpty()
+            raise RuntimeError("the block fails")
+    assert cm.isEmpty()
 
 
 def test_wrapper_level_decision(monkeypatch):

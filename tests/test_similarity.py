@@ -249,3 +249,24 @@ def test_arrow_knn_equals_sql_at_many_cells_multi_partition(spark):
             spark.conf.set(key, saved)
     assert len(out["sql"]) == 40 * 3
     assert out["arrow"] == out["sql"]
+
+
+def test_ivf_centroids_dim_path_skips_null_vectors(spark):
+    """A NULL vector contributes nothing to its cell's centroid on either
+    path: the posexplode path emits no rows for it, and the ``dim`` fast
+    path divides by the count of non-null vectors, not of cell rows."""
+    from etl_process_spark.operators.similarity import ivf_centroids
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (0, [3.0, 4.0, 5.0]), (0, None),
+         (1, [0.5, -0.5, 0.25])],
+        "label int, embedding array<double>",
+    )
+
+    def cents(**kw):
+        return {r["cell"]: list(r["centroid"])
+                for r in ivf_centroids(df, **kw).collect()}
+
+    exploded = cents()
+    assert exploded == {0: [2.0, 3.0, 4.0], 1: [0.5, -0.5, 0.25]}
+    assert cents(dim=3) == exploded

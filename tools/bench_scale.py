@@ -325,14 +325,30 @@ def _rotate_vec_expr(col, rep):
     )
 
 
+def _loop_var(code, var: str):
+    """Value of the local ``var`` in the innermost live frame running
+    ``code`` — None when no such frame is on the stack, or when it has
+    not bound ``var`` yet (before its loop starts)."""
+    frame = sys._getframe(1)
+    while frame is not None:
+        if frame.f_code is code:
+            return frame.f_locals.get(var)
+        frame = frame.f_back
+    return None
+
+
 def _plan_shape(spark, sf_dir: str, name: str) -> dict:
     """Join/exchange counts of the query's FINAL plan, plus — for
-    iterative queries — the per-round shapes that ``localCheckpoint``
-    lineage truncation hides from the final plan. The probe installed on
-    ``operators.graph.ROUND_PLAN_PROBE`` materializes each round as it
-    records it, so round N's recorded plan is exactly the truncated-
-    lineage plan that executes (not rounds 1..N's accumulated lineage)."""
-    from etl_process_spark.operators import graph
+    iterative queries — the per-round shapes that checkpoint lineage
+    truncation hides from the final plan. While the builder runs,
+    ``DataFrame.localCheckpoint`` is wrapped: a checkpoint taken inside
+    a hop of ``operators.graph.bfs_distances`` records that hop's plan
+    and materializes the hop as it records it, so round N's recorded
+    plan is exactly the truncated-lineage plan that executes (not rounds
+    1..N's accumulated lineage). The wrapper is removed on return."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from etl_process_spark.operators.graph import bfs_distances
     from etl_process_spark.plans import (
         broadcast_join_count,
         codegen_span_count,
@@ -342,17 +358,23 @@ def _plan_shape(spark, sf_dir: str, name: str) -> dict:
     from etl_process_spark.queries import QUERIES
 
     rounds: list[dict] = []
+    local_checkpoint = DataFrame.localCheckpoint
 
-    def probe(tag, i, pre, post):
-        rounds.append({
-            "round": i,
-            "broadcast_joins": broadcast_join_count(pre),
-            "sortmerge_joins": sortmerge_join_count(pre),
-            "exchanges": exchange_count(pre),
-        })
-        post.count()  # materialize: next round's lineage starts here
+    def probe(self, eager=True, storageLevel=None):
+        out = local_checkpoint(self, eager, storageLevel=storageLevel)
+        hop = _loop_var(bfs_distances.__code__, "hop")
+        if hop is not None:
+            # after the checkpoint call: the shape AQE actually ran
+            rounds.append({
+                "round": hop,
+                "broadcast_joins": broadcast_join_count(self),
+                "sortmerge_joins": sortmerge_join_count(self),
+                "exchanges": exchange_count(self),
+            })
+            out.count()  # materialize: next round's lineage starts here
+        return out
 
-    graph.ROUND_PLAN_PROBE = probe
+    DataFrame.localCheckpoint = probe
     try:
         df = QUERIES[name].builder(spark, sf_dir)
         shape = {
@@ -362,7 +384,7 @@ def _plan_shape(spark, sf_dir: str, name: str) -> dict:
             "codegen_spans": codegen_span_count(df),
         }
     finally:
-        graph.ROUND_PLAN_PROBE = None
+        DataFrame.localCheckpoint = local_checkpoint
     if rounds:
         shape["rounds"] = rounds
     return shape

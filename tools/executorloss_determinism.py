@@ -36,9 +36,9 @@ Mechanism — four parts:
     does — reruns the query on the degraded cluster — and the rerun's
     hash must equal the baseline. The failure error class is recorded.
 * **The resilient mode, also proven.** With the engine toggle
-  ``SPARK_GRAFT_CHECKPOINT_REPLICAS=2`` (session.py: every
-  ``localCheckpoint`` gets MEMORY_AND_DISK_2 — a second replica on
-  another executor), the same kill must now be survived IN-FLIGHT by
+  ``SPARK_GRAFT_CHECKPOINT_REPLICAS=2`` (``session.checkpoint``, the
+  engine's one checkpoint call, stores every block at MEMORY_AND_DISK_2
+  — a second replica on another executor), the same kill must now be survived IN-FLIGHT by
   the queries that needed a job retry in default mode. Recorded as a
   separate ``replicated_leg`` per query.
 

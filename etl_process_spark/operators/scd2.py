@@ -1,26 +1,34 @@
 """SCD Type 2 merge — the reference's one genuinely stateful operator.
 
 Re-expresses the 6-step dance of reference ``py_scripts/cards.py:86-176``
-(and its siblings ``accounts.py``, ``clients.py``, ``terminals.py``) as a
-single declarative DataFrame program:
+(and its siblings ``accounts.py``, ``clients.py``, ``terminals.py``) as
+ONE SQL statement:
 
-    result = history ∪ untouched ∪ new_keys ∪ new_versions
-             ∪ closed_old ∪ tombstones ∪ closed_deleted
+    open    = versions with effective_to = infinity
+    result  = inline(CASE … END) over  batch FULL OUTER JOIN open ON key
+              UNION ALL  closed history
 
 Spark has no in-place UPDATE, so instead of the reference's correlated
-``UPDATE … FROM`` (cards.py:125-141) the merge *rewrites* the dimension:
-compute the change-set once (the reference computes it twice — see SURVEY
-§4.2) and union the five disjoint slices.
+``UPDATE … FROM`` (cards.py:125-141) the merge *rewrites* the dimension.
+Each row of the one join emits its 1-2 output rows (a new key's first
+version; a changed key's new version and closed predecessor; a deleted
+key's tombstone and closed predecessor; or the open version untouched),
+so the change-set is computed once (the reference computes it twice — see
+SURVEY §4.2) and the dimension's open versions are scanned once.
+
+The merge decides "new key" against the open versions alone. That rests on
+the SCD2 invariant ``tests/test_scd2_properties.py`` asserts: every key
+that ever existed has exactly one open version, tombstones included.
 
 Scale notes (100 TB design):
-* Dimensions are small relative to facts; the rewrite is a dim-sized job and
-  the joins inside it broadcast the batch side. At a 1000-executor cluster
-  the same plan holds — the only shuffle is the final write.
-* For a *huge* dimension the same code works with sort-merge joins on the
-  business key (AQE decides); the rewrite then benefits from partitioning
-  the dim table by bucket(key) so the joins co-locate. Delta/Iceberg MERGE
-  is the transactional variant; plain table rewrite is dependency-free and
-  parity-sufficient.
+* Dimensions are small relative to facts; the rewrite is a dim-sized job.
+  A full outer join cannot broadcast, so it plans as a sort-merge join on
+  the business key: one shuffle of the batch and one of the open
+  versions, then the write. At a 1000-executor cluster the same plan
+  holds.
+* For a *huge* dimension, partitioning the dim table by bucket(key) lets
+  the join co-locate. Delta/Iceberg MERGE is the transactional variant;
+  plain table rewrite is dependency-free and parity-sufficient.
 """
 
 from __future__ import annotations
@@ -31,7 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_process_spark.functions.scalar import INFINITY_TS, changed_any, minus_seconds
+from etl_process_spark.functions.scalar import INFINITY_TS, minus_seconds
 
 _META_COLS = ("effective_from", "effective_to", "deleted_flg")
 
@@ -63,6 +71,10 @@ def scd2_init(batch: DataFrame, key: str, tracked: Sequence[str],
     )
 
 
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def scd2_merge(
     dim: DataFrame,
     batch: DataFrame,
@@ -87,96 +99,92 @@ def scd2_merge(
         (``create_dt``, cards.py:95) vs changed keys (``update_dt``,
         cards.py:115; the file date for snapshots, terminals.py:97).
     source_keys : full key snapshot for delete detection (cards.py:74-82);
-        for full-snapshot sources pass the batch's own keys
-        (terminals.py:76-78). ``None`` disables delete detection.
+        for full-snapshot sources pass the batch itself (terminals.py:76-78),
+        which needs no join of its own. ``None`` disables delete detection.
     clock : injectable "now" for tombstones (cards.py:154 uses ``now()``;
         pinned for deterministic tests — SURVEY §4.2).
+
+    One statement: the batch full-outer-joins the open versions on the
+    key, each joined row emits its 1-2 output rows through
+    ``inline(CASE …)``, and the closed history passes through with
+    ``UNION ALL``. A row of the join is
+
+    * a new key (no open version): its first version;
+    * changed (a tracked column differs null-safely, or the open version
+      is a tombstone, which the batch resurrects): the new version, and
+      the open one closed 1 s before it opens;
+    * deleted (an open live version whose key ``source_keys`` lacks): a
+      tombstone opening at ``clock``, and the open version closed 1 s
+      before. A key the batch changes is not also tombstoned;
+    * otherwise the open version as it is.
+
+    The frames are resolved as temp views of ``dim``'s session, so they
+    must all belong to that session.
+
+    "New key" is decided against the open versions only. That relies on
+    the SCD2 invariant ``tests/test_scd2_properties.py`` asserts: every
+    key that ever existed has exactly one open version, tombstones
+    included, so a key with history always finds its open version.
     """
-    inf = _infinity()
-    out_cols = [key, *tracked, *_META_COLS]
-
-    current_all = dim.filter(F.col("effective_to") == inf)
-    history = dim.filter(F.col("effective_to") != inf)
-
-    stg = batch.alias("stg")
-    tgt = current_all.alias("tgt")
-
-    # J1: brand-new keys — staging anti-join the whole dimension history
-    # (a key that ever existed is not "new"; resurrections go via changed).
-    new_rows = (
-        stg.join(dim.select(key).distinct(), on=key, how="left_anti")
-        .select(
-            F.col(key),
-            *[F.col(c) for c in tracked],
-            new_effective_from.cast("timestamp").alias("effective_from"),
-            inf.alias("effective_to"),
-            F.lit("N").alias("deleted_flg"),
-        )
+    out = [key, *tracked, *_META_COLS]
+    k = _ident(key)
+    b = batch.select(
+        F.col(key), *[F.col(c) for c in tracked],
+        new_effective_from.cast("timestamp").alias("__new_from"),
+        changed_effective_from.cast("timestamp").alias("__changed_from"),
+        F.lit(True).alias("__in_batch"),
     )
 
-    # J2 + P5: changed keys — null-safe any-column diff, or resurrection of a
-    # tombstoned key (terminals.py:128-131 `OR deleted_flg='Y'`). Computed
-    # ONCE and reused for both the new-version and close-old slices.
-    changed = (
-        stg.join(tgt, on=F.col(f"stg.{key}") == F.col(f"tgt.{key}"), how="inner")
-        .filter(changed_any("stg", "tgt", tracked) | (F.col("tgt.deleted_flg") == "Y"))
-    )
-    changed_ts = changed_effective_from.cast("timestamp")
-    new_versions = changed.select(
-        F.col(f"stg.{key}").alias(key),
-        *[F.col(f"stg.{c}").alias(c) for c in tracked],
-        changed_ts.alias("effective_from"),
-        inf.alias("effective_to"),
-        F.lit("N").alias("deleted_flg"),
-    )
-    closed_old = changed.select(
-        F.col(f"tgt.{key}").alias(key),
-        *[F.col(f"tgt.{c}").alias(c) for c in tracked],
-        F.col("tgt.effective_from").alias("effective_from"),
-        minus_seconds(changed_ts, 1).alias("effective_to"),
-        F.col("tgt.deleted_flg").alias("deleted_flg"),
-    )
+    def row(side: str, effective_from: str, effective_to: str, deleted_flg: str) -> str:
+        cols = [f"{side}.{_ident(c)}" for c in (key, *tracked)]
+        cols += [effective_from, effective_to, deleted_flg]
+        return "struct(" + ", ".join(
+            f"{v} AS {_ident(n)}" for v, n in zip(cols, out)
+        ) + ")"
 
-    touched_keys = changed.select(F.col(f"stg.{key}").alias(key))
-
-    # J3: deletes — current non-deleted versions whose key vanished from the
-    # source snapshot get a tombstone version (cards.py:145-176).
-    if source_keys is not None:
-        clock_ts = F.to_timestamp(F.lit(str(clock))) if clock is not None else F.current_timestamp()
-        deleted = (
-            current_all.filter(F.col("deleted_flg") == "N")
-            .join(source_keys.select(key).distinct(), on=key, how="left_anti")
-        )
-        tombstones = deleted.select(
-            F.col(key),
-            *[F.col(c) for c in tracked],
-            clock_ts.alias("effective_from"),
-            inf.alias("effective_to"),
-            F.lit("Y").alias("deleted_flg"),
-        )
-        closed_deleted = deleted.select(
-            F.col(key),
-            *[F.col(c) for c in tracked],
-            F.col("effective_from"),
-            minus_seconds(clock_ts, 1).alias("effective_to"),
-            F.col("deleted_flg"),
-        )
-        touched_keys = touched_keys.unionByName(deleted.select(key))
+    inf = "to_timestamp(:inf)"
+    tomb = "coalesce(to_timestamp(:clock), current_timestamp())"
+    new_key = row("b", "b.__new_from", inf, "'N'")
+    new_version = row("b", "b.__changed_from", inf, "'N'")
+    closed_old = row("c", "c.effective_from", "b.__changed_from - INTERVAL 1 SECOND",
+                     "c.deleted_flg")
+    tombstone = row("c", tomb, inf, "'Y'")
+    closed_deleted = row("c", "c.effective_from", tomb + " - INTERVAL 1 SECOND",
+                         "c.deleted_flg")
+    untouched = row("c", "c.effective_from", "c.effective_to", "c.deleted_flg")
+    changed = " OR ".join(
+        [f"NOT (b.{_ident(c)} <=> c.{_ident(c)})" for c in tracked]
+        + ["c.deleted_flg = 'Y'"]
+    )
+    frames = {"dim": dim, "batch": b}
+    src_join = ""
+    if source_keys is None:
+        deleted = "false"
+    elif source_keys is batch:
+        deleted = "b.__in_batch IS NULL AND c.deleted_flg = 'N'"
     else:
-        tombstones = closed_deleted = None
-
-    untouched = current_all.join(touched_keys.distinct(), on=key, how="left_anti")
-
-    parts = [history.select(out_cols), untouched.select(out_cols),
-             new_rows.select(out_cols), new_versions.select(out_cols),
-             closed_old.select(out_cols)]
-    if tombstones is not None:
-        parts += [tombstones.select(out_cols), closed_deleted.select(out_cols)]
-
-    result = parts[0]
-    for p in parts[1:]:
-        result = result.unionByName(p)
-    return result
+        frames["source_keys"] = source_keys
+        deleted = "s.__in_source IS NULL AND c.deleted_flg = 'N'"
+        src_join = (
+            f" LEFT JOIN (SELECT DISTINCT {k}, true AS __in_source"
+            f" FROM {{source_keys}}) s ON c.{k} = s.{k}"
+        )
+    sql = (
+        "SELECT inline(CASE"
+        f" WHEN c.effective_to IS NULL THEN array({new_key})"
+        f" WHEN b.__in_batch AND ({changed}) THEN array({new_version}, {closed_old})"
+        f" WHEN {deleted} THEN array({tombstone}, {closed_deleted})"
+        f" ELSE array({untouched}) END)"
+        " FROM {batch} b"
+        f" FULL OUTER JOIN (SELECT * FROM {{dim}} WHERE effective_to = {inf}) c"
+        f" ON b.{k} = c.{k}{src_join}"
+        f" UNION ALL SELECT {', '.join(map(_ident, out))} FROM {{dim}}"
+        f" WHERE effective_to != {inf}"
+    )
+    return dim.sparkSession.sql(
+        sql, args={"inf": INFINITY_TS, "clock": None if clock is None else str(clock)},
+        **frames,
+    )
 
 
 def scd2_rebuild(

@@ -6,8 +6,9 @@ Spark terms. ``observe`` attaches aggregate metrics to a plan that are
 computed DURING whatever action runs anyway: a load's write action also
 yields its row count, null counts, and min/max watermarks, with zero
 additional scans. At 100 TB the difference between "metrics ride along"
-and "metrics re-scan" is the whole nightly budget. The nightly runner
-(``runner.run_daily_batch``) counts every load and the report this way.
+and "metrics re-scan" is the whole nightly budget. Every ``TableCatalog``
+commit observes its own write this way, and the nightly runner
+(``runner.run_daily_batch``) counts a load's rejects with ``observed``.
 
 One caveat: when a join input's query stage comes out empty, AQE replaces
 the join with an empty relation, and metrics observed inside that input

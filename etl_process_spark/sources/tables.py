@@ -8,28 +8,58 @@ discipline.
 One commit protocol (SURVEY §7 "hard parts" (a)): Spark cannot atomically
 overwrite a directory it is concurrently reading, so no write touches a
 live directory. Every write goes through ``_commit``: it lands in a new
-directory ``{name}_{tag}``, then one atomic swap of ``{name}.version.json``
-(``{"dirs": [...], "committed": [[lo, hi], ...]}``) makes it visible. A
-replacing write (tag ``v<n>``) makes its directory the only live one and
+directory ``{name}_{tag}``, then one atomic swap of the pointer
+``{name}.version.json`` makes it visible::
+
+    {"dirs": [...], "committed": [[lo, hi], ...],
+     "schema": <StructType JSON>,
+     "stats": [{"rows": n, "min": {col: iso}, "max": {col: iso}}, ...]}
+
+A replacing write (tag ``v<n>``) makes its directory the only live one and
 keeps it as a snapshot for ``read_version``; an appending write (tag
 ``seg<id>``) adds its directory. Readers get snapshot isolation between
 runs, the parity analog of the reference's per-script transactional commit
 (transaction.py:113). ``committed`` holds the appended segment ids as
 merged ranges (constant size for contiguous ids, exact for gapped ones)
 and survives replacing writes, so ``has_segment`` still acknowledges
-segments a compaction folded away. Every append adds a live directory
-until a caller runs ``compact``; past Spark's partition-discovery
-threshold (32 root paths) every read runs an extra listing job.
+segments a compaction folded away.
+
+The pointer is the table's metadata, as Delta's ``metaData`` action is:
+``schema`` is what a read returns (every column nullable, partition
+columns last; an append merges it by column name with the old one, as
+``mergeSchema`` would), and ``stats[i]`` holds the row count and the
+min/max of every date and timestamp column of ``dirs[i]``, observed on the
+commit's own write. So ``read`` runs no Spark job (it passes the schema to
+``.schema()`` instead of inferring it), and ``column_max`` answers from
+the pointer. A pointer from before these keys (``{"dir"}``, a segment log,
+or one without ``schema``/``stats``) reads by inference, and its next
+commit writes the keys. Every append adds a live directory until a caller
+runs ``compact``; past Spark's partition-discovery threshold (32 root
+paths) every read runs an extra listing job.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import re
 import shutil
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DateType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 
 def _with_id(ranges: list[list[int]], sid: int) -> list[list[int]]:
@@ -54,6 +84,69 @@ def _parquet_files(d: str) -> list[str]:
         for f in files
         if f.endswith(".parquet")
     ]
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field and element nullable, as a parquet write
+    stores it."""
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _merged(old: StructType, new: StructType) -> StructType:
+    """``old`` with ``new``'s columns merged in by name, new ones last;
+    a column both carry with different types raises, as ``mergeSchema``
+    does."""
+    by_name = {f.name: f for f in new.fields}
+    fields = []
+    for f in old.fields:
+        g = by_name.pop(f.name, None)
+        if g is None or g.dataType == f.dataType:
+            fields.append(f)
+        elif isinstance(f.dataType, StructType) and isinstance(g.dataType, StructType):
+            fields.append(StructField(f.name, _merged(f.dataType, g.dataType), True, f.metadata))
+        else:
+            raise ValueError(
+                f"column {f.name!r}: cannot merge {f.dataType.simpleString()} "
+                f"with {g.dataType.simpleString()}"
+            )
+    return StructType(fields + list(by_name.values()))
+
+
+def _observed(df: DataFrame, schema: StructType) -> tuple[DataFrame, Callable[[], dict]]:
+    """``df`` with one ``observe`` of its row count and the min/max of its
+    date and timestamp columns, and a callable that returns them as
+    ``{"rows": n, "min": {col: v}, "max": {col: v}}`` after an action."""
+    cols = [f.name for f in schema.fields
+            if isinstance(f.dataType, (DateType, TimestampType, TimestampNTZType))]
+    refs = [F.col("`" + c.replace("`", "``") + "`") for c in cols]
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                    *[F.min(r).alias(f"min{i}") for i, r in enumerate(refs)],
+                    *[F.max(r).alias(f"max{i}") for i, r in enumerate(refs)])
+
+    def stats() -> dict:
+        got = obs.get
+        return {"rows": got["rows"], **{
+            k: {c: got[f"{k}{i}"] for i, c in enumerate(cols)} for k in ("min", "max")
+        }}
+
+    return df, stats
+
+
+def _iso(stats: dict) -> dict:
+    """``stats`` as the pointer stores them: dates and times as ISO text."""
+    return {"rows": stats["rows"], **{
+        k: {c: None if v is None else str(v) for c, v in stats[k].items()}
+        for k in ("min", "max")
+    }}
 
 
 class TableCatalog:
@@ -89,45 +182,87 @@ class TableCatalog:
     def _commit(
         self, name: str, df: DataFrame, tag: str, *, replace: bool,
         segment_id: int | None = None, partition_cols: list[str] | None = None,
-    ) -> None:
+    ) -> dict:
         """The one write path: write ``df`` to the new directory
         ``{name}_{tag}``, then swap the pointer so that directory replaces
         the live ones (``replace``) or joins them, with ``segment_id``
-        added to the committed ids."""
+        added to the committed ids. Returns the directory's stats, which
+        one ``observe`` collects on the write itself."""
         old = self._read_pointer(name) or {"dirs": [], "committed": []}
         new_dir = os.path.join(self.root, f"{name}_{tag}")
+        parts = partition_cols or []
+        written = _nullable(StructType(
+            [f for f in df.schema.fields if f.name not in parts]
+            + [df.schema[c] for c in parts]
+        ))
+        schema = written
+        if not replace and old["dirs"]:
+            prior = (
+                StructType.fromJson(old["schema"]) if "schema" in old
+                else self.spark.read.option("mergeSchema", "true").parquet(*old["dirs"]).schema
+            )
+            schema = _merged(prior, written)
+        df, collected = _observed(df, written)
         writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
+        if parts:
+            writer = writer.partitionBy(*parts)
         writer.parquet(new_dir)
+        # observed at the top of the written plan, where the metrics arrive
+        # even when AQE empties a join below (quality.py)
+        stats = collected()
         committed = old["committed"]
         if segment_id is not None:
             committed = _with_id(committed, segment_id)
-        dirs = [new_dir] if replace else [*old["dirs"], new_dir]
+        if replace:
+            dirs, all_stats = [new_dir], [_iso(stats)]
+        else:
+            dirs = [*old["dirs"], new_dir]
+            all_stats = [*old.get("stats", [None] * len(old["dirs"])), _iso(stats)]
         tmp = self._pointer(name) + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({"dirs": dirs, "committed": committed}, fh)
+            json.dump({"dirs": dirs, "committed": committed,
+                       "schema": schema.jsonValue(), "stats": all_stats}, fh)
         os.replace(tmp, self._pointer(name))
+        return stats
 
     def exists(self, name: str) -> bool:
         return self._current_dirs(name) is not None
 
     def read(self, name: str) -> DataFrame:
-        ds = self._current_dirs(name)
-        if ds is None:
+        p = self._read_pointer(name)
+        if p is None:
             raise FileNotFoundError(f"table {name} not initialized under {self.root}")
-        return self.spark.read.parquet(*ds)
+        reader = self.spark.read
+        if "schema" in p:
+            reader = reader.schema(StructType.fromJson(p["schema"]))
+        return reader.parquet(*p["dirs"])
+
+    def column_max(self, name: str, col: str) -> Any:
+        """Largest value of the date or timestamp column ``col``, None for
+        an empty table. Answered from the pointer's stats; a pointer that
+        lacks them for some live directory runs the aggregate instead."""
+        p = self._read_pointer(name)
+        if p is None:
+            raise FileNotFoundError(f"table {name} not initialized under {self.root}")
+        stats = p.get("stats", [None])
+        if any(st is None for st in stats):
+            return self.read(name).agg(F.max(col)).first()[0]
+        parse = (dt.date if isinstance(StructType.fromJson(p["schema"])[col].dataType, DateType)
+                 else dt.datetime).fromisoformat
+        return max((parse(st["max"][col]) for st in stats if st["max"][col] is not None),
+                   default=None)
 
     def _next_version(self, name: str) -> int:
         vs = self.versions(name)
         return (vs[-1] + 1) if vs else 0
 
-    def overwrite(self, name: str, df: DataFrame) -> None:
+    def overwrite(self, name: str, df: DataFrame) -> dict:
         """Atomic table rewrite: one new version directory replaces every
-        live one. Committed segment ids stay acknowledged."""
-        self._commit(name, df, f"v{self._next_version(name)}", replace=True)
+        live one. Committed segment ids stay acknowledged. Returns the
+        commit's stats."""
+        return self._commit(name, df, f"v{self._next_version(name)}", replace=True)
 
-    def append_segment(self, name: str, df: DataFrame, segment_id: int) -> None:
+    def append_segment(self, name: str, df: DataFrame, segment_id: int) -> dict | None:
         """Append-only log write: persist ``df`` as segment ``segment_id``
         and commit it with one atomic pointer swap — O(segment) bytes
         written per call instead of ``overwrite``'s O(table) rewrite.
@@ -136,12 +271,13 @@ class TableCatalog:
         before the swap leaves an orphan directory that the replay
         rewrites. Readers see the union of all live directories through
         ``read``. Periodic ``compact`` (or ``overwrite``) folds the log
-        back to one directory.
+        back to one directory. Returns the commit's stats, or None for a
+        committed id.
         """
         sid = int(segment_id)
         if self.has_segment(name, sid):
-            return
-        self._commit(name, df, f"seg{sid:08d}", replace=False, segment_id=sid)
+            return None
+        return self._commit(name, df, f"seg{sid:08d}", replace=False, segment_id=sid)
 
     def has_segment(self, name: str, segment_id: int) -> bool:
         """True iff ``segment_id`` was committed (it may since have been
@@ -153,15 +289,16 @@ class TableCatalog:
     def segment_count(self, name: str) -> int:
         return len(self._current_dirs(name) or [])
 
-    def append(self, name: str, df: DataFrame) -> None:
+    def append(self, name: str, df: DataFrame) -> dict:
         """Append sink (reference S8, INSERT...SELECT): a new segment under
-        the next free id; a missing table is created by ``overwrite``."""
+        the next free id; a missing table is created by ``overwrite``.
+        Returns the commit's stats: ``rows``, and ``min``/``max`` of each
+        date or timestamp column (None when the write had no rows)."""
         p = self._read_pointer(name)
         if p is None:
-            self.overwrite(name, df)
-        else:
-            committed = p["committed"]
-            self.append_segment(name, df, committed[-1][1] + 1 if committed else 0)
+            return self.overwrite(name, df)
+        committed = p["committed"]
+        return self.append_segment(name, df, committed[-1][1] + 1 if committed else 0)
 
     def write_bucketed(
         self,

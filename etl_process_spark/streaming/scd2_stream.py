@@ -71,7 +71,10 @@ def scd2_sink(
                 table, scd2_init(latest, key, tracked, F.col(ts_col))
             )
             return
-        dim = catalog.read(table)
+        # scd2_merge is one SQL statement over temp views, and a view lives
+        # in one session; foreachBatch hands over a clone of the query's
+        # session, so the dimension is read into the batch's session
+        dim = TableCatalog(batch.sparkSession, catalog.root).read(table)
         merged = scd2_merge(
             dim,
             latest,

@@ -172,16 +172,80 @@ def _events(df):
     )
 
 
-def test_incremental_report_matches_full_restricted_to_new(synthetic_cl):
+def _deep_history_card(spark, wm):
+    """One card with 5 rows before ``wm``, one of them a late arrival
+    slotted between two older rows, and 2 rows after it: the first after
+    ``wm`` fires rule 4 only through the 3 rows before it (the late one
+    included) and rule 3 from the late row's city; the second's lags still
+    reach back across ``wm``."""
+    def row(tid, t, amt, result, city):
+        return (tid, t, "CARD_DEEP", "WITHDRAW", Decimal(amt), result, "T1",
+                INF_D, "Person D", "PD", INF_D, "+70000000099", None, INF_D, city)
+
+    def before(minutes):
+        return wm - dt.timedelta(minutes=minutes)
+
+    return spark.createDataFrame([
+        row("deep0", before(300), 900, "SUCCESS", "Tver"),
+        row("deep1", before(240), 800, "SUCCESS", "Tver"),
+        row("deep2", before(12), 400, "REJECT", "Tver"),
+        row("deep_late", before(8), 300, "REJECT", "Kazan"),
+        row("deep3", before(4), 200, "REJECT", "Kazan"),
+        row("deep4", wm + dt.timedelta(minutes=5), 100, "SUCCESS", "Tver"),
+        row("deep5", wm + dt.timedelta(minutes=6), 50, "SUCCESS", "Tver"),
+    ], CL_SCHEMA)
+
+
+def test_incremental_report_matches_full_restricted_to_new(spark, synthetic_cl):
     from etl_process_spark.pipeline.fraud import build_fraud_report_incremental
 
     wm = D(2021, 3, 1, 18, 0, 0)
-    full_new = build_fraud_report(synthetic_cl, REPORT_DT).filter(
+    cl = synthetic_cl.unionByName(_deep_history_card(spark, wm))
+    full_new = build_fraud_report(cl, REPORT_DT, include_trans_id=True).filter(
         F.col("event_dt") > F.lit(wm)
     )
-    inc = build_fraud_report_incremental(synthetic_cl, wm, REPORT_DT)
-    assert _events(inc) == _events(full_new)
+    inc = build_fraud_report_incremental(cl, wm, REPORT_DT, include_trans_id=True)
+    assert _bag(inc) == _bag(full_new)
     assert len(_events(inc)) > 0  # the comparison is not vacuous
+    deep = sorted((r["trans_id"], r["event_type"]) for r in inc.collect()
+                  if r["trans_id"].startswith("deep"))
+    assert deep == [("deep4", 3), ("deep4", 4)]
+
+
+def test_incremental_report_plans_one_window(spark):
+    """The incremental report windows the touched cards once: one Window
+    in the physical plan (a tails window plus the lag window would be
+    two), and the touched-card set reads the fact alone, with no join of
+    the enrichment chain."""
+    from etl_process_spark.pipeline.fraud import build_fraud_report_incremental
+    from etl_process_spark.plans.audit import explain_str
+
+    fact = spark.createDataFrame(
+        [("t1", D(2021, 1, 1, 10), "C1", "PAYMENT", Decimal("1.00"), "SUCCESS", "T1")],
+        "trans_id string, trans_date timestamp, card_num string, oper_type string, "
+        "amt decimal(15,2), oper_result string, terminal string",
+    )
+    terminals = spark.createDataFrame(
+        [("T1", "POS", "Moscow", "a1", EF, INF_TS, "N")],
+        "terminal_id string, terminal_type string, terminal_city string, "
+        "terminal_address string, effective_from timestamp, effective_to timestamp, "
+        "deleted_flg string",
+    )
+    cards = spark.createDataFrame([("C1", "A1")], "card_num string, account_num string")
+    accounts = spark.createDataFrame(
+        [("A1", INF_D, "CL1")], "account_num string, valid_to date, client string")
+    clients = spark.createDataFrame(
+        [("CL1", "Ivanov", "Ivan", None, "P1", INF_D, "+7")],
+        "client_id string, last_name string, first_name string, patronymic string, "
+        "passport_num string, passport_valid_to date, phone string",
+    )
+    blacklist = spark.createDataFrame([], "entry_dt date, passport_num string")
+    cl = enrich_transactions(fact, terminals, cards, accounts, clients, blacklist)
+    inc = build_fraud_report_incremental(cl, EF, REPORT_DT, include_trans_id=True)
+    plan = explain_str(inc, "simple")
+    assert plan.count("Window [") == 1, plan
+    # 5 broadcast joins of the enrichment plus the semi join on touched cards
+    assert plan.count("BroadcastHashJoin") == 6, plan
 
 
 def test_incremental_report_composes_across_two_advances(synthetic_cl):

@@ -72,6 +72,9 @@ def test_watermark_store(spark, tmp_path):
     assert store.get("fact") == "2021-01-02 09:00:00"
 
 
+POINTER_KEYS = {"dirs", "committed", "schema", "stats"}
+
+
 def _pointer_keys(cat, name):
     with open(os.path.join(cat.root, f"{name}.version.json")) as fh:
         return set(json.load(fh))
@@ -125,9 +128,9 @@ def test_catalog_time_travel_and_vacuum(spark, tmp_path):
     # an append lands in a new directory: the snapshot it follows keeps
     # the rows that were written to it
     cat.overwrite("t", spark.range(3))
-    assert _pointer_keys(cat, "t") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "t") == POINTER_KEYS
     cat.append("t", spark.range(3, 5))
-    assert _pointer_keys(cat, "t") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "t") == POINTER_KEYS
     assert cat.read_version("t", 0).count() == 3
     assert cat.read("t").count() == 5
 
@@ -665,14 +668,14 @@ def test_catalog_append_segment_log(spark, tmp_path):
     cat.overwrite("t", spark.range(0, 3).toDF("id"))
     assert cat.has_segment("t", 2) and cat.has_segment("t", 0)
     assert sorted(r["id"] for r in cat.read("t").collect()) == [0, 1, 2]
-    assert _pointer_keys(cat, "t") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "t") == POINTER_KEYS
 
     # a gapped id stays uncommitted through a compaction
     cat.append_segment("g", spark.range(0, 2).toDF("id"), 0)
     cat.append_segment("g", spark.range(2, 4).toDF("id"), 2)
-    assert _pointer_keys(cat, "g") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "g") == POINTER_KEYS
     cat.compact("g")
-    assert _pointer_keys(cat, "g") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "g") == POINTER_KEYS
     assert cat.has_segment("g", 0) and cat.has_segment("g", 2)
     assert not cat.has_segment("g", 1)
 
@@ -687,12 +690,12 @@ def test_catalog_append_segment_log(spark, tmp_path):
     cat.write_partitioned(
         "p", spark.range(0, 4).withColumn("k", F.col("id") % 2), ["k"]
     )
-    assert _pointer_keys(cat, "p") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "p") == POINTER_KEYS
     assert cat.has_segment("p", 0)
     assert sorted(r["id"] for r in cat.read("p").collect()) == [0, 1, 2, 3]
 
     cat.write_sorted("p", spark.range(0, 4).toDF("id"), ["id"], 2)
-    assert _pointer_keys(cat, "p") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "p") == POINTER_KEYS
     assert cat.has_segment("p", 0)
 
 
@@ -727,11 +730,103 @@ def test_catalog_long_log_through_compactions(spark, tmp_path):
     assert cat._read_pointer("s")["committed"] == [[0, n - 1]]
 
 
+def _jobs(spark, group, fn):
+    """(result of ``fn()``, number of Spark jobs it ran in job group ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_read_runs_no_job(spark, tmp_path):
+    """The pointer carries the schema, so reading a committed table plans
+    without a schema-inference job, also for a partitioned table."""
+    from etl_process_spark.sources.tables import TableCatalog
+
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.overwrite("t", spark.range(3).withColumn("s", F.col("id").cast("string")))
+    cat.append("t", spark.range(3, 5).withColumn("s", F.lit("x")))
+    cat.write_partitioned(
+        "p", spark.range(4).withColumn("k", (F.col("id") % 2).cast("string")), ["k"]
+    )
+    for name, cols in (("t", ["id", "s"]), ("p", ["id", "k"])):
+        df, n_jobs = _jobs(spark, f"read_{name}", lambda name=name: cat.read(name))
+        assert n_jobs == 0, name
+        assert df.columns == cols  # partition columns last
+        assert all(f.nullable for f in df.schema.fields)
+    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(5))
+    assert {(r["id"], r["k"]) for r in cat.read("p").collect()} == {
+        (0, "0"), (1, "1"), (2, "0"), (3, "1")
+    }
+
+
+def test_catalog_commit_returns_stats(spark, tmp_path):
+    """Every commit returns the row count and the min/max of each date and
+    timestamp column of the rows it wrote; the pointer keeps them per live
+    directory, and ``column_max`` answers from them without a job."""
+    from etl_process_spark.sources.tables import TableCatalog
+
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    schema = "id long, ts timestamp, d date, s string"
+    first = cat.append("t", spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 2, 3, 4, 5), dt.date(2024, 1, 2), "a")], schema))
+    assert first == {
+        "rows": 1,
+        "min": {"ts": dt.datetime(2024, 1, 2, 3, 4, 5), "d": dt.date(2024, 1, 2)},
+        "max": {"ts": dt.datetime(2024, 1, 2, 3, 4, 5), "d": dt.date(2024, 1, 2)},
+    }
+    stats = cat.append("t", spark.createDataFrame(
+        [(2, dt.datetime(2024, 1, 5, 0, 0, 0, 123456), dt.date(2024, 1, 1), "b"),
+         (3, dt.datetime(2024, 1, 3), None, None),
+         (4, None, dt.date(2024, 2, 1), "c")], schema))
+    assert stats == {
+        "rows": 3,
+        "min": {"ts": dt.datetime(2024, 1, 3), "d": dt.date(2024, 1, 1)},
+        "max": {"ts": dt.datetime(2024, 1, 5, 0, 0, 0, 123456), "d": dt.date(2024, 2, 1)},
+    }
+    empty = cat.append("t", spark.createDataFrame([], schema))
+    assert empty == {"rows": 0, "min": {"ts": None, "d": None},
+                     "max": {"ts": None, "d": None}}
+    assert len(cat._read_pointer("t")["stats"]) == len(cat._current_dirs("t")) == 3
+
+    mx, n_jobs = _jobs(spark, "column_max", lambda: (
+        cat.column_max("t", "ts"), cat.column_max("t", "d")))
+    assert mx == (dt.datetime(2024, 1, 5, 0, 0, 0, 123456), dt.date(2024, 2, 1))
+    assert n_jobs == 0
+    assert cat.overwrite("t", spark.range(2))["rows"] == 2
+
+
+def test_catalog_append_merges_schema_by_name(spark, tmp_path):
+    """An append's pointer schema is the old one merged by column name with
+    the new frame's, new columns last; a type conflict raises before the
+    pointer moves."""
+    from etl_process_spark.sources.tables import TableCatalog
+
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.overwrite("t", spark.createDataFrame([(1, "a")], "id long, name string"))
+    cat.append("t", spark.createDataFrame([("extra", 2)], "note string, id long"))
+    df = cat.read("t")
+    assert df.columns == ["id", "name", "note"]
+    assert sorted(map(tuple, df.collect()), key=repr) == sorted(
+        [(1, "a", None), (2, None, "extra")], key=repr
+    )
+    dirs = cat._current_dirs("t")
+    with pytest.raises(ValueError, match="name"):
+        cat.append("t", spark.createDataFrame([(3, 4)], "id long, name int"))
+    assert cat._current_dirs("t") == dirs
+
+
 def test_catalog_reads_older_pointer_formats(spark, tmp_path):
     """A warehouse written before the one pointer format still works: a
     ``{"dir"}`` pointer and a ``{"dirs", "segments", "compacted_through"}``
     segment log read, acknowledge the ids they recorded, and take the one
-    format at their next commit."""
+    format at their next commit. A pointer without ``schema``/``stats``
+    reads by inference, ``column_max`` over it runs the aggregate, and its
+    next commit writes both keys."""
     from etl_process_spark.sources.tables import TableCatalog
 
     root = tmp_path / "wh"
@@ -746,7 +841,7 @@ def test_catalog_reads_older_pointer_formats(spark, tmp_path):
     assert cat.read("t").count() == 3
     assert not cat.has_segment("t", 0)
     cat.append("t", spark.range(3, 5))
-    assert _pointer_keys(cat, "t") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "t") == POINTER_KEYS
     assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(5))
     assert cat.read_version("t", 0).count() == 3
 
@@ -761,9 +856,32 @@ def test_catalog_reads_older_pointer_formats(spark, tmp_path):
         True, True, True, True, False, True, False
     ]
     cat.append_segment("s", spark.range(4, 5), 4)
-    assert _pointer_keys(cat, "s") == {"dirs", "committed"}
+    assert _pointer_keys(cat, "s") == POINTER_KEYS
     assert cat._read_pointer("s")["committed"] == [[0, 5]]
     cat.compact("s")
     cat.vacuum("s", keep_last=1)
     assert not [d for d in os.listdir(root) if d.startswith("s_seg")]
     assert sorted(r["id"] for r in cat.read("s").collect()) == list(range(5))
+
+    # a pointer in the one format, from before schema and stats
+    ts = [(i, dt.datetime(2024, 1, 1 + i)) for i in range(3)]
+    spark.createDataFrame(ts, "id long, ts timestamp").write.parquet(str(root / "f_seg00000000"))
+    put("f", {"dirs": [str(root / "f_seg00000000")], "committed": [[0, 0]]})
+    df, n_jobs = _jobs(spark, "older_read", lambda: cat.read("f"))
+    assert n_jobs >= 1  # schema inference
+    assert df.columns == ["id", "ts"]
+    mx, n_jobs = _jobs(spark, "older_max", lambda: cat.column_max("f", "ts"))
+    assert mx == dt.datetime(2024, 1, 3) and n_jobs >= 1
+    stats = cat.append("f", spark.createDataFrame(
+        [(9, dt.datetime(2024, 2, 1))], "id long, ts timestamp"))
+    assert stats["rows"] == 1 and stats["max"]["ts"] == dt.datetime(2024, 2, 1)
+    assert _pointer_keys(cat, "f") == POINTER_KEYS
+    assert cat._read_pointer("f")["stats"][0] is None  # the older directory
+    # an older directory without stats keeps column_max on the aggregate
+    assert cat.column_max("f", "ts") == dt.datetime(2024, 2, 1)
+    _, n_jobs = _jobs(spark, "older_read_after", lambda: cat.read("f"))
+    assert n_jobs == 0
+    assert sorted(r["id"] for r in cat.read("f").collect()) == [0, 1, 2, 9]
+    cat.overwrite("f", cat.read("f"))
+    mx, n_jobs = _jobs(spark, "older_max_after", lambda: cat.column_max("f", "ts"))
+    assert mx == dt.datetime(2024, 2, 1) and n_jobs == 0

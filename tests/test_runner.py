@@ -274,12 +274,14 @@ def test_late_arriving_fact_still_reported(spark, dims, tmp_path):
 
 
 def test_day_two_runs_no_count_actions(spark, dims, tmp_path):
-    """Counts ride on the writes (observe), so a night runs only the jobs
-    its writes, the report's watermark max and the DQ read-back need. A
-    returning count() or first() over a load or the report adds jobs and
-    fails the upper bound. The stages run on threads of their own; their
-    jobs must stay in the caller's job group (the lower bound), or a
-    per-run ledger keyed by group loses them. Measured: 37 jobs for day 2."""
+    """Counts ride on the writes (observe), catalog reads take their schema
+    from the pointer and the report's watermark max comes from the
+    pointer's stats, so a night runs only the jobs its writes and its DQ
+    check need. A returning count() or first() over a load or the report,
+    or a read that infers its schema, adds jobs and fails the upper bound.
+    The stages run on threads of their own; their jobs must stay in the
+    caller's job group (the lower bound), or a per-run ledger keyed by
+    group loses them. Measured: 20 jobs for day 2."""
     inbox = tmp_path / "inbox"
     inbox.mkdir()
     wh = str(tmp_path / "wh")
@@ -301,7 +303,7 @@ def test_day_two_runs_no_count_actions(spark, dims, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert r2.transactions_appended == 2
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("runner_day2"))
-    assert 30 <= n_jobs <= 37
+    assert 13 <= n_jobs <= 20
 
 
 def test_overlapping_blacklist_files_count_new_rows(spark, dims, tmp_path):
@@ -427,3 +429,63 @@ def test_failed_load_keeps_other_loads_and_rerun_recovers(spark, dims, tmp_path)
     assert rows(cat, "rep_fraud") == rows(ref, "rep_fraud")
     assert r.report_rows == len(rows(ref, "rep_fraud")) - len(report_before)
     assert rows(cat, "dim_terminals_hist") == rows(ref, "dim_terminals_hist")
+
+
+def test_dq_gate_reports_planted_violations_without_reading_history(
+    spark, dims, tmp_path, monkeypatch
+):
+    """A night whose file plants one violation of each kind reports them,
+    the same counts as the expectations checked over the whole fact, and
+    its rows land in ``dq_report``; a second night reports the same
+    again. The gate appends tonight's rows but never reads ``dq_report``
+    back."""
+    from etl_process_spark.pipeline import expectations as ex
+
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "wh")
+    _write_day1(inbox)
+    (inbox / "transactions_01032024.txt").write_text(
+        TX_HEADER
+        + "T001;2024-03-01 10:00:00;10,00;CARD1               ;PAYMENT;SUCCESS;A1\n"
+        + "T001;2024-03-01 10:05:00;11,00;CARD1               ;PAYMENT;SUCCESS;A1\n"
+        + "T002;2024-03-01 11:00:00;-5,00;CARD2               ;PAYMENT;SUCCESS;A1\n"
+        + "T003;;10,00;CARD2               ;PAYMENT;SUCCESS;A1\n"
+        + ";2024-03-01 12:00:00;10,00;CARD2               ;PAYMENT;SUCCESS;A1\n"
+    )
+    reads = []
+    read = TableCatalog.read
+
+    def recording_read(self, name):
+        reads.append(name)
+        return read(self, name)
+
+    monkeypatch.setattr(TableCatalog, "read", recording_read)
+    planted = {
+        "not_null_trans_id": 1,
+        "not_null_trans_date": 1,
+        "non_negative_amount": 1,
+        "unique_trans_id": 2,
+    }
+    cat = TableCatalog(spark, wh)
+    for night, clock in enumerate((CLOCK, CLOCK + dt.timedelta(days=1))):
+        r = run_daily_batch(
+            spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+            clock=clock, archive=False,
+        )
+        assert r.transactions_appended == (5 if night == 0 else 0)
+        assert r.details["dq_violations"] == planted
+    assert "dq_report" not in reads
+
+    full = ex.check_expectations(read(cat, "fact_transactions"), [
+        ex.not_null("trans_id"),
+        ex.not_null("trans_date"),
+        ex.expect_expr("non_negative_amount", "amt IS NULL OR amt >= 0"),
+        ex.unique("trans_id"),
+    ])
+    assert {row["rule"]: row["n_violations"] for row in full.collect()} == planted
+    stored = read(cat, "dq_report").collect()
+    assert sorted((row["run_clock"], row["rule"], row["n_violations"]) for row in stored) == sorted(
+        (str(clock), rule, n)
+        for clock in (CLOCK, CLOCK + dt.timedelta(days=1)) for rule, n in planted.items()
+    )

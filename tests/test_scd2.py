@@ -264,3 +264,166 @@ def test_scd2_asof_reconstructs_each_day(spark):
     assert "B" not in {r["tid"] for r in after.collect()}
     with_del = scd2_asof(dim, CLOCK + dt.timedelta(hours=1), include_deleted=True)
     assert {r["tid"] for r in with_del.collect()} == {"A", "B", "C"}
+
+
+# ---------------------------------------------------------------------------
+# scd2_merge against the 7-slice union it replaced
+# ---------------------------------------------------------------------------
+
+def _seven_slice_merge(dim, batch, key, tracked, *, new_effective_from,
+                       changed_effective_from, source_keys=None, clock=None):
+    """The merge as a union of 7 disjoint slices (history, untouched, new
+    keys, new versions, closed old, tombstones, closed deleted), with new
+    keys decided against the whole history: the oracle of the one-join
+    ``scd2_merge``."""
+    from etl_process_spark.functions.scalar import INFINITY_TS, changed_any, minus_seconds
+
+    inf = F.to_timestamp(F.lit(INFINITY_TS))
+    out_cols = [key, *tracked, "effective_from", "effective_to", "deleted_flg"]
+    current_all = dim.filter(F.col("effective_to") == inf)
+    history = dim.filter(F.col("effective_to") != inf)
+    stg, tgt = batch.alias("stg"), current_all.alias("tgt")
+    new_rows = stg.join(dim.select(key).distinct(), on=key, how="left_anti").select(
+        F.col(key), *tracked,
+        new_effective_from.cast("timestamp").alias("effective_from"),
+        inf.alias("effective_to"), F.lit("N").alias("deleted_flg"),
+    )
+    changed = stg.join(
+        tgt, on=F.col(f"stg.{key}") == F.col(f"tgt.{key}"), how="inner"
+    ).filter(changed_any("stg", "tgt", tracked) | (F.col("tgt.deleted_flg") == "Y"))
+    changed_ts = changed_effective_from.cast("timestamp")
+    new_versions = changed.select(
+        F.col(f"stg.{key}").alias(key), *[F.col(f"stg.{c}").alias(c) for c in tracked],
+        changed_ts.alias("effective_from"), inf.alias("effective_to"),
+        F.lit("N").alias("deleted_flg"),
+    )
+    closed_old = changed.select(
+        F.col(f"tgt.{key}").alias(key), *[F.col(f"tgt.{c}").alias(c) for c in tracked],
+        F.col("tgt.effective_from").alias("effective_from"),
+        minus_seconds(changed_ts, 1).alias("effective_to"),
+        F.col("tgt.deleted_flg").alias("deleted_flg"),
+    )
+    touched = changed.select(F.col(f"stg.{key}").alias(key))
+    parts = [history, new_rows, new_versions, closed_old]
+    if source_keys is not None:
+        clock_ts = F.to_timestamp(F.lit(str(clock)))
+        deleted = current_all.filter(F.col("deleted_flg") == "N").join(
+            source_keys.select(key).distinct(), on=key, how="left_anti")
+        parts.append(deleted.select(
+            F.col(key), *tracked, clock_ts.alias("effective_from"),
+            inf.alias("effective_to"), F.lit("Y").alias("deleted_flg")))
+        parts.append(deleted.select(
+            F.col(key), *tracked, "effective_from",
+            minus_seconds(clock_ts, 1).alias("effective_to"), "deleted_flg"))
+        touched = touched.unionByName(deleted.select(key))
+    parts.append(current_all.join(touched.distinct(), on=key, how="left_anti"))
+    result = parts[0].select(out_cols)
+    for p in parts[1:]:
+        result = result.unionByName(p.select(out_cols))
+    return result
+
+
+def _bag(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _both(dim, batch, key, tracked, **kw):
+    """The one-join merge and the oracle on the same input; asserts equal
+    bags and returns the merged rows."""
+    got = _bag(scd2_merge(dim, batch, key, tracked, **kw))
+    assert got == _bag(_seven_slice_merge(dim, batch, key, tracked, **kw))
+    return got
+
+
+def test_merge_matches_seven_slice_oracle_over_random_days(spark):
+    """Random day sequences of upserts, deletes, NULL values and
+    resurrections (the property suite's universe), with delete detection
+    by the batch itself, by a separate key frame, and off."""
+    import random
+
+    rng = random.Random(20240101)
+    schema = "k string, v int, effective_from timestamp, effective_to timestamp, deleted_flg string"
+    n_days = 0
+    for _ in range(3):
+        days = [
+            {k: rng.choice([None, 0, 1, 2, 3])
+             for k in rng.sample(["k1", "k2", "k3"], rng.randint(0, 3))}
+            for _ in range(rng.randint(2, 3))
+        ]
+
+        def batch(i):
+            return spark.createDataFrame(
+                [(k, v, T0 + dt.timedelta(days=i)) for k, v in sorted(days[i].items())],
+                "k string, v int, batch_ts timestamp",
+            )
+
+        rows = [tuple(r) for r in scd2_init(batch(0), "k", ["v"], F.col("batch_ts")).collect()]
+        for i in range(1, len(days)):
+            b = batch(i)
+            keys = (b, b.select("k"), None)[n_days % 3]
+            rows = _both(
+                spark.createDataFrame(rows, schema), b, "k", ["v"],
+                new_effective_from=F.col("batch_ts"),
+                changed_effective_from=F.col("batch_ts"),
+                source_keys=keys, clock=T0 + dt.timedelta(days=i, hours=1),
+            )
+            n_days += 1
+    assert n_days >= 3
+
+
+def test_merge_matches_oracle_on_resurrected_tombstone(spark):
+    dim = _merge_snapshot(
+        _dim0(spark),
+        spark.createDataFrame([("A", "Moscow", "POS")], ["tid", "city", "kind"]),
+        T1,
+    )  # B and C tombstoned
+    day3 = spark.createDataFrame(
+        [("A", "Moscow", "POS"), ("B", "Perm", "ATM"), ("C", "Omsk", "POS")],
+        ["tid", "city", "kind"],
+    )
+    t2 = dt.datetime(2021, 1, 3)
+    rows = _both(
+        spark.createDataFrame(_bag(dim), dim.schema), day3, "tid", TRACKED,
+        new_effective_from=F.lit(str(t2)), changed_effective_from=F.lit(str(t2)),
+        source_keys=day3, clock=t2,
+    )
+    assert ("B", "Perm", "ATM", t2, INF, "N") in rows
+    assert ("C", "Omsk", "POS", t2, INF, "N") in rows
+
+
+def test_merge_matches_oracle_when_source_keys_differ_from_batch(spark):
+    """The CDC shape: the batch holds only inserts and updates, and
+    ``source_keys`` is the full key snapshot that marks deletions."""
+    snap1 = spark.createDataFrame(
+        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id long, name string, v double")
+    upserts = spark.createDataFrame([(2, "b2", 21.0), (4, "d", 40.0)],
+                                    "id long, name string, v double")
+    keep_keys = spark.createDataFrame([(1,), (2,), (4,)], "id long")
+    dim = scd2_init(snap1, "id", ["name", "v"], F.lit("2024-01-01"))
+    rows = _both(
+        dim, upserts, "id", ["name", "v"],
+        new_effective_from=F.lit("2024-01-02"), changed_effective_from=F.lit("2024-01-02"),
+        source_keys=keep_keys, clock="2024-01-02 00:00:00",
+    )
+    assert [r[:2] for r in rows if r[5] == "Y"] == [(3, "c")]
+    assert len(rows) == 6
+
+
+def test_merge_plans_one_join_of_batch_and_open_versions(spark):
+    """A snapshot merge (``source_keys`` is the batch) plans one join: the
+    full outer join of the batch with the open versions. A separate key
+    frame adds the one join with its distinct keys."""
+    dim = _dim0(spark)
+    batch = spark.createDataFrame([("A", "Kazan", "POS")], ["tid", "city", "kind"])
+    kw = dict(new_effective_from=F.lit(str(T1)), changed_effective_from=F.lit(str(T1)),
+              clock=CLOCK)
+
+    def joins(source_keys):
+        m = scd2_merge(dim, batch, "tid", TRACKED, source_keys=source_keys, **kw)
+        plan = m._jdf.queryExecution().optimizedPlan().toString()
+        return [line.strip(" :+-").split(",")[0] for line in plan.splitlines()
+                if line.strip(" :+-").startswith("Join ")]
+
+    assert joins(batch) == ["Join FullOuter"]
+    assert joins(None) == ["Join FullOuter"]
+    assert joins(batch.select("tid")) == ["Join LeftOuter", "Join FullOuter"]
